@@ -332,34 +332,6 @@ def _bit_masks() -> list[int]:
     return [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 
-def simhash_from_hashes(hashes: Column) -> Column:
-    """64-bit SimHash from a MATERIALIZED array<long> hash column.
-
-    Per bit b: count tokens with bit b set (arithmetic-shift + mask fold);
-    signature bit = (2*count > n), i.e. the +1/-1 majority vote. 64 cheap
-    shift-add folds beat one fold that allocates a 64-element when-array per
-    token by ~2x end-to-end (measured, 200k rows incl. hashing) — array allocation per element was
-    the cost, not the fold count.
-
-    The caller MUST pass a column reference to an already-projected hash
-    array (withColumn first): passing `transform(tokens, xxhash64)` inline
-    would re-hash every token 64 times, since each of the 64 folds embeds
-    its own copy of the expression (Catalyst does not CSE across them).
-    """
-    def _bit_fold(b: int):
-        # pyspark lambda-arity sniffing: the merge fn must take exactly 2 args
-        return lambda acc, h: acc + (F.shiftright(h, b).bitwiseAND(F.lit(1)))
-
-    n = F.size(hashes)
-    sig = F.lit(0).cast("long")
-    for b, m in enumerate(_bit_masks()):
-        cnt = F.aggregate(hashes, F.lit(0).cast("long"), _bit_fold(b))
-        sig = sig.bitwiseOR(
-            F.when(cnt * 2 > n, F.lit(m).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 _LANE_MASK = 0x0001000100010001  # bit 0 of each 16-bit lane
 
 

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparklead.mining.two_phase import template_id_col
+
 
 def parse_brain(
     df: DataFrame,
@@ -143,9 +145,7 @@ def parse_brain(
     )
     # clusters whose (post-mask) templates coincide MERGE — the reference
     # keys template_set by the final template tuple (Brain.py:395-397)
-    mapping = cluster_templates.withColumn(
-        "template_id", F.concat(F.lit("e"), F.substring(F.md5("template"), 1, 8))
-    )
+    mapping = cluster_templates.withColumn("template_id", template_id_col("template"))
     sizes = keyed.groupBy("_cluster").agg(F.count(F.lit(1)).alias("cluster_size"))
     # The cluster -> template mapping is CLUSTER-COUNT-sized (a template
     # table), so it is collected ONCE while ``keyed`` is persisted and

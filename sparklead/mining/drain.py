@@ -1,43 +1,33 @@
-"""Two-phase distributed Drain-style template mining.
+"""Distributed Drain-style template mining on the two-phase skeleton.
 
 The reference wraps drain3 and feeds it ONE ROW AT A TIME through a shared
-mutable miner object (/root/reference/loglead/enhancers/eventlog.py:116-199,
+mutable miner object (loglead/enhancers/eventlog.py:116-199,
 parsers/drain3/drain.py:10-27) — sequential, stateful, arrival-order ids.
-That design cannot distribute, so this is a redesign (SURVEY.md §2.9):
+Here Drain is the ``_LocalDrain`` plugin of ``two_phase.TwoPhaseMiner``
+(phase-1 mapInPandas, recursive tree merge, driver fold, broadcast assign):
+it implements the plugin contract ``add`` / ``templates`` / ``match`` with
+the core Drain idea — bucket by token count, greedy similarity clustering
+(token-position agreement >= sim_th, disagreeing positions wildcarded to
+'<*>'); ``match`` reads only the row's own length bucket.
 
-  Phase 1 (distributed, mapInPandas): each partition mines its own local
-      template set with the same core Drain idea — bucket by token count,
-      greedy similarity clustering (token-position agreement >= sim_th,
-      disagreeing positions wildcarded to '<*>').
-  Phase 2 (tree merge): the per-partition template sets (bounded by
-      max_clusters each) fold through RECURSIVE distributed mapInPandas
-      merge rounds (fanout 32) until at most ``fanout`` partitions remain,
-      so the driver collects O(max_clusters x fanout) rows at any input
-      partition count; the final fold runs the same rule after a
-      deterministic sort, producing the template table.
-  Phase 3 (distributed, broadcast): the final table is broadcast and each
-      event is assigned its best-matching template via an Arrow-batched
-      pandas UDF — a map-side lookup, zero shuffle.
+Template ids are ``'e' + md5(template)[:8]`` (``two_phase.template_id``) —
+deterministic under any partitioning, unlike drain3's first-appearance
+counters (eventlog.py:191); parity with the reference is therefore
+distributional (cluster count / size distribution), per SURVEY.md §7
+stage 3.
 
-Template ids are ``'e' + md5(template)[:8]`` — deterministic under any
-partitioning, unlike drain3's first-appearance counters (eventlog.py:191);
-parity with the reference is therefore distributional (cluster count / size
-distribution), per SURVEY.md §7 stage 3.
-
-State persistence: ``templates_df`` round-trips through parquet
-(save_templates / load_templates), the Spark analogue of drain3's
+State: ``DrainMiner.update`` folds new data into the existing templates
+(drain3's periodic-update shape), and ``templates_df`` round-trips through
+parquet (save_templates / load_templates), the Spark analogue of drain3's
 FilePersistence snapshots (parsers/drain3/drain3.ini:1-3) and the north
 rule's resumable checkpoint.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .two_phase import TwoPhaseMiner, template_id  # noqa: F401  (re-exported)
 
 WILDCARD = "<*>"
 
@@ -116,103 +106,25 @@ class _LocalDrain:
         out.sort(key=lambda t: (len(t[0]), " ".join(t[0])))
         return out
 
-
-def _templates_pdf(tpls: list) -> "pd.DataFrame":
-    """Arrow-safe template frame: an EMPTY partition must yield
-    object/int64-dtyped columns — pandas defaults empty columns to float64,
-    which pyarrow cannot convert to array<string> and the whole mapInPandas
-    stage dies (hit by empty streaming micro-batches; latent for any empty
-    input partition in batch fit, round-4 fix)."""
-    return pd.DataFrame(
-        {
-            "template": pd.Series([t for t, _ in tpls], dtype=object),
-            "count": pd.Series([c for _, c in tpls], dtype="int64"),
-        }
-    )
+    def match(self, tokens: list[str], by_len: dict) -> str | None:
+        best_id, best_sim = None, -1.0
+        for tpl, tid in by_len.get(len(tokens), ()):
+            sim = _similarity(tpl, tokens)
+            if sim > best_sim:
+                best_id, best_sim = tid, sim
+        return best_id if best_sim >= self.sim_th else None
 
 
-def template_id(template_tokens: list[str]) -> str:
-    """'e' + md5(template)[:8] — reference id convention (AEL.py:32, eventlog.py:191)."""
-    return "e" + hashlib.md5(" ".join(template_tokens).encode()).hexdigest()[:8]
+class DrainMiner(TwoPhaseMiner):
+    """Distributed two-phase miner over a token-array column, clustering
+    with ``_LocalDrain``."""
 
-
-class DrainMiner:
-    """Distributed two-phase miner over a token-array column."""
+    default_out_col = "e_event_drain_id"
 
     def __init__(self, sim_th: float = 0.4, max_clusters: int = 1024):
+        super().__init__(lambda: _LocalDrain(sim_th, max_clusters))
         self.sim_th = sim_th
         self.max_clusters = max_clusters
-        self.templates: list[tuple[list[str], int]] = []
-
-    # ------------------------------------------------------------- phase 1+2
-    def _partials(self, df: DataFrame, tokens_col: str, merge_fanout: int = 32) -> DataFrame:
-        """Per-partition template sets, TREE-MERGED before the driver sees
-        them: with P input partitions a direct collect is O(max_clusters x P)
-        driver rows — at 100 TB (10^5-10^6 partitions) a multi-hundred-
-        million-row collect. Recursive distributed merge rounds (repartition
-        to P/fanout, fold with the same local algorithm, repeat) cap driver
-        intake at O(max_clusters x fanout) regardless of P."""
-        sim_th, max_clusters = self.sim_th, self.max_clusters
-
-        def mine_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # log data is massively repetitive: count identical token arrays
-            # first, then cluster the DISTINCT ones (weighted) in a sorted,
-            # deterministic order — phase 1 stops depending on row order and
-            # the Python loop runs over distinct lines, not all lines.
-            # Considered alternative: a GLOBAL groupBy(tokens).count() before
-            # the mapInPandas would dedup lines across partitions too (JVM
-            # map-side combine, Python sees each distinct line once) at the
-            # cost of one distinct-lines-sized shuffle. Rejected for now:
-            # phase 1 stays a narrow map over the scan (zero shuffle), the
-            # cross-partition repeats are re-mined only into bounded partial
-            # sets the tree-merge folds anyway, and changing the partial
-            # composition would shift the (drift-tracked) template
-            # fingerprints without a measured win.
-            from collections import Counter
-
-            counts: Counter = Counter()
-            for pdf in batches:
-                counts.update(tuple(toks) for toks in pdf["t"])
-            local = _LocalDrain(sim_th, max_clusters)
-            for toks, cnt in sorted(
-                counts.items(), key=lambda kv: (len(kv[0]), " ".join(kv[0]), -kv[1])
-            ):
-                local.add(list(toks), cnt)
-            tpls = local.templates()
-            yield _templates_pdf(tpls)
-
-        def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rows = []
-            for pdf in batches:
-                rows.extend((list(t), int(c)) for t, c in zip(pdf["template"], pdf["count"]))
-            rows.sort(key=lambda r: (len(r[0]), " ".join(r[0]), -r[1]))
-            local = _LocalDrain(sim_th, max_clusters)
-            for t, c in rows:
-                local.add(t, c)
-            tpls = local.templates()
-            yield _templates_pdf(tpls)
-
-        schema = "template array<string>, count long"
-        partials = df.select(F.col(tokens_col).alias("t")).mapInPandas(mine_partition, schema)
-        n_parts = df.rdd.getNumPartitions()
-        # RECURSIVE fold (round-2 fix): repeat the distributed merge until at
-        # most ``merge_fanout`` partitions remain, so driver intake is
-        # O(max_clusters x fanout) at ANY input partition count (10^6 parquet
-        # splits at 100 TB), not O(max_clusters x P/fanout) of a single round.
-        while n_parts > merge_fanout:
-            n_parts = max(1, n_parts // merge_fanout)
-            partials = partials.repartition(n_parts).mapInPandas(merge_partition, schema)
-        return partials
-
-    def fit(self, df: DataFrame, tokens_col: str = "e_words", merge_fanout: int = 32) -> "DrainMiner":
-        partial = self._partials(df, tokens_col, merge_fanout).collect()
-        # final phase 2: deterministic driver merge (sorted input -> stable result)
-        rows = sorted(partial, key=lambda r: (len(r["template"]), " ".join(r["template"]), -r["count"]))
-        merger = _LocalDrain(self.sim_th, self.max_clusters)
-        for r in rows:
-            merger.add(list(r["template"]), int(r["count"]))
-        self.templates = merger.templates()
-        return self
 
     def update(self, df: DataFrame, tokens_col: str = "e_words", merge_fanout: int = 32) -> "DrainMiner":
         """INCREMENTAL fit: mine the new data's partial template sets
@@ -223,50 +135,10 @@ class DrainMiner:
         by max_clusters. Like any online drain, the final template set
         depends on batch arrival order (inherent to incremental mining);
         within one update the merge is deterministic (sorted fold)."""
-        partial = self._partials(df, tokens_col, merge_fanout).collect()
-        rows = [(list(t), int(c)) for t, c in self.templates]
-        rows += [(list(r["template"]), int(r["count"])) for r in partial]
-        rows.sort(key=lambda r: (len(r[0]), " ".join(r[0]), -r[1]))
-        merger = _LocalDrain(self.sim_th, self.max_clusters)
-        for t, c in rows:
-            merger.add(t, c)
-        self.templates = merger.templates()
+        self.templates = self._merged(self.templates, df, tokens_col, merge_fanout)
         return self
 
-    # ------------------------------------------------------------- phase 3
-    def assign(self, df: DataFrame, tokens_col: str = "e_words", out_col: str = "e_event_drain_id") -> DataFrame:
-        """Broadcast template match: map-side, Arrow-batched, no shuffle."""
-        spark = df.sparkSession
-        by_len: dict[int, list[tuple[list[str], str]]] = {}
-        for tpl, _ in self.templates:
-            by_len.setdefault(len(tpl), []).append((tpl, template_id(tpl)))
-        b_templates = spark.sparkContext.broadcast(by_len)
-        sim_th = self.sim_th
-
-        @F.pandas_udf("string")
-        def match(tok_series: pd.Series) -> pd.Series:
-            cand_map = b_templates.value
-
-            def one(toks) -> str | None:
-                toks = list(toks)
-                best_id, best_sim = None, -1.0
-                for tpl, tid in cand_map.get(len(toks), ()):
-                    sim = _similarity(tpl, toks)
-                    if sim > best_sim:
-                        best_id, best_sim = tid, sim
-                return best_id if best_sim >= sim_th else None
-
-            return tok_series.map(one)
-
-        return df.withColumn(out_col, match(F.col(tokens_col)))
-
     # ------------------------------------------------------------- state
-    def templates_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(template_id(t), " ".join(t), t, c) for t, c in self.templates]
-        return spark.createDataFrame(
-            rows, "template_id string, template string, template_tokens array<string>, count long"
-        )
-
     def save_templates(self, spark: SparkSession, path: str) -> None:
         self.templates_df(spark).coalesce(1).write.mode("overwrite").parquet(path)
 

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparklead.mining.two_phase import template_id_col
+
 
 def _pos_cardinalities(base: DataFrame, tokens_col: str) -> DataFrame:
     """(part_key, pos, d): distinct-token count per column of each partition."""
@@ -311,7 +313,7 @@ def _s4_templates(base: DataFrame, tokens_col: str) -> DataFrame:
     sizes = base.groupBy("part_key").agg(F.count(F.lit(1)).alias("part_len"))
     return (
         templates.join(sizes, "part_key")
-        .withColumn("template_id", F.concat(F.lit("e"), F.substring(F.md5("template"), 1, 8)))
+        .withColumn("template_id", template_id_col("template"))
         .select("part_key", "template_id", "template", "part_len")
     )
 

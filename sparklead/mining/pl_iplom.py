@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparklead.mining.two_phase import template_id_col
+
 # plan doubles per S2 round (see _keyed) -> truncate lineage twice as often
 # as the linear-growth components loop (dedup._TRUNCATE_EVERY = 8)
 _TRUNCATE_EVERY = 4
@@ -172,7 +174,7 @@ def pl_iplom_templates(
     return (
         templates.join(sizes, "part_key")
         .crossJoin(broadcast(total))
-        .withColumn("template_id", F.concat(F.lit("e"), F.substring(F.md5("template"), 1, 8)))
+        .withColumn("template_id", template_id_col("template"))
         .withColumn("is_outlier", F.col("part_len") / F.col("_fst_total") < support_threshold)
         .drop("_fst_total")
     )

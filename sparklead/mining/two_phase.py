@@ -1,106 +1,159 @@
 """Generic two-phase distributed template miner.
 
-Factors the Drain redesign (mining/drain.py) into a reusable skeleton for
-every sequential/stateful parser in the reference family (Spell, LenMa —
-/root/reference/loglead/parsers/pyspell/spell.py:175-224,
-parsers/lenma/lenma.py:218-319, both driven row-by-row through Object
-columns at enhancers/eventlog.py:326,354):
+One skeleton for every sequential/stateful parser in the reference LogLead
+family (Drain, Spell, LenMa — loglead/parsers/drain3/drain.py:10-27,
+parsers/pyspell/spell.py:175-224, parsers/lenma/lenma.py:218-319, all driven
+row-by-row through a shared mutable object at enhancers/eventlog.py:116-199,
+326,354). That design cannot distribute, so this is a redesign
+(SURVEY.md §2.9):
 
-  phase 1  mapInPandas: each partition clusters its own rows with the
-           plugin's LOCAL algorithm -> tiny per-partition template set
-  phase 2  driver merge: deterministic sort, then the same local algorithm
-           folds the partial template sets
-  phase 3  broadcast assignment via the plugin's match()
+  phase 1  mapInPandas: each partition clusters its DISTINCT token arrays
+           (weighted by multiplicity) with the plugin's local algorithm ->
+           a small per-partition template set
+  phase 2  tree merge: the partial sets fold through RECURSIVE distributed
+           merge rounds (fanout 32) until at most ``fanout`` partitions
+           remain, so the driver collects O(templates x fanout) rows at any
+           input partition count; the final driver fold runs the same
+           rule (``_fold``, also phase 1's: deterministic sorted order)
+  phase 3  broadcast assignment: {token_count: [(tokens, id), ...]} is
+           broadcast and each row takes the plugin's match() in an
+           Arrow-batched pandas UDF — a map-side lookup, zero shuffle
 
-A plugin supplies a ``LocalClusterer`` with add(tokens, count),
-templates() -> [(tokens, count)], and a static match(tokens, templates).
-Ids are 'e'+md5(template)[:8] — partitioning-invariant.
+Plugin contract — a zero-argument factory returning a clusterer with:
+  add(tokens, count)                fold one weighted token sequence in
+  templates() -> [(tokens, count)]  sorted by (length, joined tokens)
+  match(tokens, by_len) -> id|None  best template for a row under the
+                                    clusterer's own threshold; ``by_len``
+                                    is the broadcast template map
+
+Ids are ``'e' + md5(template)[:8]`` — partitioning-invariant, unlike the
+reference's first-appearance counters (eventlog.py:191).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections import Counter
+from collections.abc import Callable, Iterable, Iterator
+from itertools import chain
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 def template_id(template_tokens: list[str]) -> str:
+    """'e' + md5(template)[:8] — reference id convention (AEL.py:32, eventlog.py:191)."""
     return "e" + hashlib.md5(" ".join(template_tokens).encode()).hexdigest()[:8]
 
 
+def template_id_col(template: str | Column) -> Column:
+    """``template_id`` as a Spark column over a space-joined template string."""
+    return F.concat(F.lit("e"), F.substring(F.md5(template), 1, 8))
+
+
+def _templates_pdf(tpls: list) -> "pd.DataFrame":
+    """Arrow-safe template frame: an EMPTY partition must yield
+    object/int64-dtyped columns — pandas defaults empty columns to float64,
+    which pyarrow cannot convert to array<string> and the whole mapInPandas
+    stage dies (any empty input partition or streaming micro-batch)."""
+    return pd.DataFrame(
+        {
+            "template": pd.Series([t for t, _ in tpls], dtype=object),
+            "count": pd.Series([c for _, c in tpls], dtype="int64"),
+        }
+    )
+
+
+def _fold(factory: Callable[[], object], rows: Iterable[tuple]) -> list[tuple[list[str], int]]:
+    """The one merge rule: (tokens, count) rows sorted by (length, joined
+    tokens, -count) through a fresh clusterer."""
+    local = factory()
+    for toks, cnt in sorted(rows, key=lambda r: (len(r[0]), " ".join(r[0]), -r[1])):
+        local.add(list(toks), int(cnt))
+    return local.templates()
+
+
 class TwoPhaseMiner:
+    default_out_col = "e_event_template_id"
+
     def __init__(self, clusterer_factory: Callable[[], object]):
         self._factory = clusterer_factory
         self.templates: list[tuple[list[str], int]] = []
 
+    # ------------------------------------------------------------- phase 1+2
     def _partials(self, df: DataFrame, tokens_col: str, merge_fanout: int = 32) -> DataFrame:
-        """Per-partition template sets with an intermediate distributed merge
-        round (same tree-merge rationale as DrainMiner._partials: cap driver
-        intake at O(templates x partitions/fanout), not O(x partitions))."""
+        """Per-partition template sets, TREE-MERGED before the driver sees
+        them: with P input partitions a direct collect is O(templates x P)
+        driver rows — at 100 TB (10^5-10^6 partitions) a multi-hundred-
+        million-row collect. Recursive distributed merge rounds (repartition
+        to P/fanout, fold with the same local algorithm, repeat) cap driver
+        intake at O(templates x fanout) regardless of P."""
         factory = self._factory
 
         def mine_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # distinct-first clustering (see DrainMiner._partials): the local
-            # algorithm sees each distinct line once, weighted, sorted —
-            # deterministic and O(distinct) instead of O(rows)
-            from collections import Counter
-
+            # log data is massively repetitive: count identical token arrays
+            # first, then cluster the DISTINCT ones (weighted) in a sorted,
+            # deterministic order — phase 1 stops depending on row order and
+            # the Python loop runs over distinct lines, not all lines.
+            # Considered alternative: a GLOBAL groupBy(tokens).count() before
+            # the mapInPandas would dedup lines across partitions too (JVM
+            # map-side combine, Python sees each distinct line once) at the
+            # cost of one distinct-lines-sized shuffle. Rejected for now:
+            # phase 1 stays a narrow map over the scan (zero shuffle), the
+            # cross-partition repeats are re-mined only into bounded partial
+            # sets the tree-merge folds anyway, and changing the partial
+            # composition would shift the (drift-tracked) template
+            # fingerprints without a measured win.
             counts: Counter = Counter()
             for pdf in batches:
                 counts.update(tuple(toks) for toks in pdf["t"])
-            local = factory()
-            for toks, cnt in sorted(
-                counts.items(), key=lambda kv: (len(kv[0]), " ".join(kv[0]), -kv[1])
-            ):
-                local.add(list(toks), cnt)
-            tpls = local.templates()
-            yield pd.DataFrame({"template": [t for t, _ in tpls], "count": [c for _, c in tpls]})
+            yield _templates_pdf(_fold(factory, counts.items()))
 
         def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             rows = []
             for pdf in batches:
-                rows.extend((list(t), int(c)) for t, c in zip(pdf["template"], pdf["count"]))
-            rows.sort(key=lambda r: (len(r[0]), " ".join(r[0]), -r[1]))
-            local = factory()
-            for t, c in rows:
-                local.add(t, c)
-            tpls = local.templates()
-            yield pd.DataFrame({"template": [t for t, _ in tpls], "count": [c for _, c in tpls]})
+                rows.extend(zip(pdf["template"], pdf["count"]))
+            yield _templates_pdf(_fold(factory, rows))
 
         schema = "template array<string>, count long"
         partials = df.select(F.col(tokens_col).alias("t")).mapInPandas(mine_partition, schema)
         n_parts = df.rdd.getNumPartitions()
-        # recursive fold to <= fanout partitions (see DrainMiner._partials):
-        # driver intake is O(templates x fanout) at any input partition count
+        # RECURSIVE fold (round-2 fix): repeat the distributed merge until at
+        # most ``merge_fanout`` partitions remain, so driver intake is
+        # O(templates x fanout) at ANY input partition count (10^6 parquet
+        # splits at 100 TB), not O(templates x P/fanout) of a single round.
         while n_parts > merge_fanout:
             n_parts = max(1, n_parts // merge_fanout)
             partials = partials.repartition(n_parts).mapInPandas(merge_partition, schema)
         return partials
 
-    def fit(self, df: DataFrame, tokens_col: str = "e_words", merge_fanout: int = 32) -> "TwoPhaseMiner":
+    def _merged(self, base: list, df: DataFrame, tokens_col: str, merge_fanout: int) -> list:
+        """Driver fold of ``base`` templates followed by ``df``'s partials."""
         partial = self._partials(df, tokens_col, merge_fanout).collect()
-        rows = sorted(partial, key=lambda r: (len(r["template"]), " ".join(r["template"]), -r["count"]))
-        merger = self._factory()
-        for r in rows:
-            merger.add(list(r["template"]), int(r["count"]))
-        self.templates = merger.templates()
+        return _fold(self._factory, list(base) + [(r["template"], r["count"]) for r in partial])
+
+    def fit(self, df: DataFrame, tokens_col: str = "e_words", merge_fanout: int = 32) -> "TwoPhaseMiner":
+        self.templates = self._merged([], df, tokens_col, merge_fanout)
         return self
 
-    def assign(self, df: DataFrame, tokens_col: str, out_col: str, matcher: Callable) -> DataFrame:
-        spark = df.sparkSession
-        payload = [(t, template_id(t)) for t, _ in self.templates]
-        b = spark.sparkContext.broadcast(payload)
+    # ------------------------------------------------------------- phase 3
+    def assign(self, df: DataFrame, tokens_col: str = "e_words", out_col: str | None = None) -> DataFrame:
+        """Broadcast template match: map-side, Arrow-batched, no shuffle."""
+        by_len: dict[int, list[tuple[list[str], str]]] = {}
+        for tpl, _ in self.templates:
+            by_len.setdefault(len(tpl), []).append((tpl, template_id(tpl)))
+        b_templates = df.sparkSession.sparkContext.broadcast(by_len)
+        factory = self._factory
 
         @F.pandas_udf("string")
         def match(tok_series: pd.Series) -> pd.Series:
-            tpls = b.value
-            return tok_series.map(lambda toks: matcher(list(toks), tpls))
+            matcher, cand_map = factory().match, b_templates.value
+            return tok_series.map(lambda toks: matcher(list(toks), cand_map))
 
-        return df.withColumn(out_col, match(F.col(tokens_col)))
+        return df.withColumn(out_col or self.default_out_col, match(F.col(tokens_col)))
 
+    # ------------------------------------------------------------- state
     def templates_df(self, spark: SparkSession) -> DataFrame:
         rows = [(template_id(t), " ".join(t), t, c) for t, c in self.templates]
         return spark.createDataFrame(
@@ -187,13 +240,13 @@ class LocalSpell:
         out.sort(key=lambda t: (len(t[0]), " ".join(t[0])))
         return out
 
-    @staticmethod
-    def match(tokens: list[str], templates: list[tuple[list[str], str]], tau: float = 0.5) -> str | None:
+    def match(self, tokens: list[str], by_len: dict) -> str | None:
+        # every length bucket, in template order (templates() sorts by length first)
         best_id, best_len = None, 0
-        for tpl, tid in templates:
+        for tpl, tid in chain.from_iterable(by_len.values()):
             solid = [t for t in tpl if t != "<*>"]
             l = _lcs_len(solid, tokens)
-            if l > best_len and l >= len(tokens) * tau:
+            if l > best_len and l >= len(tokens) * self.tau:
                 best_id, best_len = tid, l
         return best_id
 
@@ -250,8 +303,7 @@ class LocalLenMa:
         out.sort(key=lambda t: (len(t[0]), " ".join(t[0])))
         return out
 
-    @staticmethod
-    def match(tokens: list[str], templates: list[tuple[list[str], str]], threshold: float = 0.9) -> str | None:
+    def match(self, tokens: list[str], by_len: dict) -> str | None:
         """Assign a row to its best final template. The reference compares
         against a cluster's last-updated word-length vector — arrival-order
         state that a distributed assignment cannot reproduce; here wildcard
@@ -260,14 +312,12 @@ class LocalLenMa:
         absorbed every length during mining)."""
         lens = [len(t) for t in tokens]
         best_id, best_sim = None, 0.0
-        for tpl, tid in templates:
-            if len(tpl) != len(tokens):
-                continue
+        for tpl, tid in by_len.get(len(tokens), ()):
             tlens = [len(t) if t != "<*>" else l for t, l in zip(tpl, lens)]
-            sim = LocalLenMa._cos(tlens, lens)
+            sim = self._cos(tlens, lens)
             if sim > best_sim:
                 best_id, best_sim = tid, sim
-        return best_id if best_sim >= threshold else None
+        return best_id if best_sim >= self.threshold else None
 
 
 def parse_spell(df: DataFrame, tokens_col: str = "e_words", out_col: str = "e_event_spell_id", tau: float = 0.5):
@@ -281,11 +331,9 @@ def parse_spell(df: DataFrame, tokens_col: str = "e_words", out_col: str = "e_ev
     (0.46-0.78 across shuffles), i.e. the divergence is within the noise
     the reference's order-sensitivity already carries."""
     miner = TwoPhaseMiner(lambda: LocalSpell(tau)).fit(df, tokens_col)
-    assigned = miner.assign(df, tokens_col, out_col, lambda toks, tpls: LocalSpell.match(toks, tpls, tau))
-    return assigned, miner
+    return miner.assign(df, tokens_col, out_col), miner
 
 
 def parse_lenma(df: DataFrame, tokens_col: str = "e_words", out_col: str = "e_event_lenma_id", threshold: float = 0.9):
     miner = TwoPhaseMiner(lambda: LocalLenMa(threshold)).fit(df, tokens_col)
-    assigned = miner.assign(df, tokens_col, out_col, lambda toks, tpls: LocalLenMa.match(toks, tpls, threshold))
-    return assigned, miner
+    return miner.assign(df, tokens_col, out_col), miner

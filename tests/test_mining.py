@@ -38,6 +38,18 @@ def test_partitioning_invariance(tokenized):
     assert sorted(c for _, c in t1) == sorted(c for _, c in t2)
 
 
+@pytest.mark.parametrize("parser", ["parse_drain", "parse_spell", "parse_lenma"])
+def test_empty_partitions(tokenized, parser):
+    """2 rows over 8 partitions: the empty partitions must yield an empty
+    template set, not abort the phase-1 mapInPandas stage."""
+    import sparklead.mining as M
+
+    tiny = tokenized.limit(2).repartition(8)
+    out, miner = getattr(M, parser)(tiny, "e_words")
+    assert sum(c for _, c in miner.templates) == 2
+    assert out.count() == 2
+
+
 def test_persistence_roundtrip(tokenized, tmp_path):
     spark = tokenized.sparkSession
     miner = DrainMiner().fit(tokenized, "e_words")

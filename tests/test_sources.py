@@ -75,3 +75,52 @@ def test_sample_semi_join(spark):
     ev2, seq2 = sample_sequences(ev, seqs, fraction=0.3, seed=7)
     kept = {r["seq_id"] for r in seq2.collect()}
     assert {r["seq_id"] for r in ev2.select("seq_id").distinct().collect()} <= kept
+
+
+def test_load_gelf_renames_message_and_timestamp(spark, tmp_path):
+    from sparklead.sources.syslog import load_gelf
+
+    p = tmp_path / "gelf.jsonl"
+    p.write_text(
+        '{"message": "disk full", "@timestamp": "2024-01-02T03:04:05Z", "host": "n1"}\n'
+        '{"message": "disk ok", "@timestamp": "2024-01-02T03:04:06Z", "host": "n2"}\n'
+    )
+    df = load_gelf(spark, str(p))
+    assert "message" not in df.columns and "@timestamp" not in df.columns
+    rows = df.select("m_message", F.col("m_timestamp").cast("long").alias("epoch"), "host").collect()
+    assert sorted(map(tuple, rows)) == [("disk full", 1704164645, "n1"), ("disk ok", 1704164646, "n2")]
+
+
+def test_load_hadoop_events(spark, tmp_path):
+    """seq_id from the app directory, multiline merge within ONE physical
+    file: app_2's leading continuation line stays its own entry instead of
+    joining app_1's same-named file."""
+    from sparklead.sources.syslog import load_hadoop_events
+
+    for app in ("application_1", "application_2"):
+        (tmp_path / app).mkdir()
+    (tmp_path / "application_1" / "container_01.log").write_text(
+        "2015-10-18 18:01:47,978 INFO [main] org.apache.App: Created MRAppMaster\n"
+        "java.lang.Exception: boom\n"
+        "\tat org.apache.App.run(App.java:1)\n"
+        "2015-10-18 18:01:48,963 WARN [IPC Server handler 3] org.apache.Rpc: slow\n"
+    )
+    (tmp_path / "application_2" / "container_01.log").write_text(
+        "\tat org.apache.Orphan.run(Orphan.java:9)\n"
+        "2015-10-18 18:02:00,000 INFO [main] org.apache.App: Started\n"
+    )
+    ev = load_hadoop_events(spark, str(tmp_path / "*" / "*.log"))
+    rows = [(r["seq_id"], r["seq_id_sub"], r["process"], r["m_message"]) for r in ev.collect()]
+    assert {sub for _, sub, _, _ in rows} == {"container_01.log"}
+    by_app: dict = {}
+    for app, _, proc, msg in rows:
+        by_app.setdefault(app, []).append((proc, msg))
+    assert sorted(by_app) == ["application_1", "application_2"]
+    assert sorted(p for p, _ in by_app["application_1"]) == ["IPC Server handler 3", "main"]
+    merged = [m for p, m in by_app["application_1"] if p == "main"][0]
+    assert "Created MRAppMaster" in merged and "boom" in merged and "App.java:1" in merged
+    assert all("Orphan" not in m for _, m in by_app["application_1"])
+    assert sorted(p for p, _ in by_app["application_2"]) == ["", "main"]
+    orphan = [m for p, m in by_app["application_2"] if p == ""][0]
+    assert "Orphan.java:9" in orphan and "Started" not in orphan
+    assert all("[" not in m for _, _, _, m in rows)

@@ -334,6 +334,31 @@ def _bit_masks() -> list[int]:
 
 _LANE_MASK = 0x0001000100010001  # bit 0 of each 16-bit lane
 
+# The lanes below build their 16 folds and 64-bit votes as SQL expression
+# strings: written with the Column API, every F.lit / shiftright /
+# bitwiseAND / when / bitwiseOR is its own py4j round-trip (0.1-0.25 ms),
+# and the unrolled expressions cost 8k-11.5k of them — 1-2 s of driver
+# time per plan build. One ``F.expr`` parses the same expression in the
+# JVM in one call; the analyzed expressions (and so the values and the
+# executor work) are unchanged. tests/test_plans.py pins the call counts.
+
+
+def _majority_vote_sql(pack: str, n: str) -> str:
+    """The 64-bit SimHash from 16 lane-packed counters ``{pack}0..15`` over
+    ``n`` tokens: bit b is set iff 2 * count(b) > n, where count(b) sits in
+    lane b // 16 of counter b % 16 (unsigned shift: lane 3 sits under the
+    sign bit). Bit 63's mask is Long.MIN_VALUE, written as a bigint
+    literal."""
+    terms = ["CAST(0 AS BIGINT)"]
+    for b, m in enumerate(_bit_masks()):
+        k, lane = b % 16, b // 16
+        cnt = f"(shiftrightunsigned({pack}{k}, {16 * lane}) & 65535)"
+        terms.append(
+            f"CASE WHEN ({cnt} * 2) > {n} THEN CAST({m}L AS BIGINT) "
+            "ELSE CAST(0 AS BIGINT) END"
+        )
+    return " | ".join(terms)
+
 
 def with_simhash(df: DataFrame, tokens_col: str, out_col: str = "simhash", max_tokens: int = 65_535) -> DataFrame:
     """Add a 64-bit SimHash column — the fast lane-packed form.
@@ -349,31 +374,24 @@ def with_simhash(df: DataFrame, tokens_col: str, out_col: str = "simhash", max_t
     (deterministic, documented prefix semantics) rather than a silently
     lane-overflowed value. Packs and the hash array are materialized as
     columns — every expression here is multiply-referenced, and Catalyst
-    re-evaluates (never CSEs) repeated subexpressions.
+    re-evaluates (never CSEs) repeated subexpressions. The folds and the
+    vote are built as SQL strings (see ``_majority_vote_sql``).
     """
     assert max_tokens < 65_536, "lane counters are 16-bit; the cap must stay under 65,536"
-
-    def _lane_fold(k: int):
-        # pyspark lambda-arity sniffing: the merge fn must take exactly 2 args
-        return lambda acc, h: acc + (F.shiftright(h, k).bitwiseAND(F.lit(_LANE_MASK)))
-
     df = df.withColumn(
         "_sh_h", F.transform(F.slice(F.col(tokens_col), 1, max_tokens), lambda t: F.xxhash64(t))
     )
-    for k in range(16):
-        df = df.withColumn(
-            f"_sh_p{k}", F.aggregate(F.col("_sh_h"), F.lit(0).cast("long"), _lane_fold(k))
+    packs = [f"_sh_p{k}" for k in range(16)]
+    df = df.withColumns({
+        p: F.expr(
+            f"aggregate(_sh_h, CAST(0 AS BIGINT), "
+            f"(acc, h) -> acc + (shiftright(h, {k}) & {_LANE_MASK}))"
         )
-    n = F.size(F.col("_sh_h"))  # capped length — must match the counted stream
-    sig = F.lit(0).cast("long")
-    for b, m in enumerate(_bit_masks()):
-        k, lane = b % 16, b // 16
-        # unsigned shift for extraction: lane 3 sits under the sign bit
-        cnt = F.shiftrightunsigned(F.col(f"_sh_p{k}"), 16 * lane).bitwiseAND(F.lit(0xFFFF))
-        sig = sig.bitwiseOR(
-            F.when(cnt * 2 > n, F.lit(m).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return df.withColumn(out_col, sig).drop("_sh_h", *[f"_sh_p{k}" for k in range(16)])
+        for k, p in enumerate(packs)
+    })
+    # n is the capped length — it must match the counted stream
+    sig = F.expr(_majority_vote_sql("_sh_p", "size(_sh_h)"))
+    return df.withColumn(out_col, sig).drop("_sh_h", *packs)
 
 
 def simhash64(tokens: Column) -> Column:
@@ -437,29 +455,18 @@ def simhash_signatures(
         F.col(key_col).alias("id"),
         F.posexplode_outer(F.slice(F.col(tokens_col), 1, max_tokens)).alias("_pos", "_t"),
     )
-    h = F.xxhash64("_t")  # xxhash64(null) == seed (42), matching with_simhash's fold
-    lane = F.lit(_LANE_MASK).cast("long")
-    is_elem = F.col("_pos").isNotNull()
+    # xxhash64(null) == seed (42), matching with_simhash's fold
     packs = [
-        F.sum(
-            F.when(is_elem, F.shiftright(h, k).bitwiseAND(lane)).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias(f"_p{k}")
+        F.expr(
+            f"sum(CASE WHEN (_pos IS NOT NULL) THEN (shiftright(xxhash64(_t), {k}) & "
+            f"CAST({_LANE_MASK} AS BIGINT)) ELSE CAST(0 AS BIGINT) END) AS _p{k}"
+        )
         for k in range(16)
     ]
     agg = ex.groupBy("id").agg(
-        F.coalesce(F.sum(is_elem.cast("long")), F.lit(0)).alias("_n"), *packs
+        F.expr("coalesce(sum(CAST((_pos IS NOT NULL) AS BIGINT)), 0) AS _n"), *packs
     )
-    n = F.col("_n")
-    sig = F.lit(0).cast("long")
-    for b, m in enumerate(_bit_masks()):
-        k, ln = b % 16, b // 16
-        cnt = F.shiftrightunsigned(F.col(f"_p{k}"), 16 * ln).bitwiseAND(F.lit(0xFFFF))
-        sig = sig.bitwiseOR(
-            F.when(cnt * 2 > n, F.lit(m).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    return agg.select("id", sig.alias("simhash"))
+    return agg.select("id", F.expr(f"{_majority_vote_sql('_p', '_n')} AS simhash"))
 
 
 def simhash_dedup(df: DataFrame, tokens_col: str, key_col: str = "doc_id") -> DataFrame:
@@ -506,32 +513,26 @@ def with_simhash_md5(
         ),
     )
 
-    def _nibble_fold(i: int):
-        def fold(acc, h):
-            v = F.conv(F.substring(h, i, 1), 16, 10).cast("long")
-            packed = F.lit(0).cast("long")
-            for k in range(4):
-                bit = F.floor(v / F.lit(2**k)).cast("long") % 2
-                packed = packed + bit * F.lit(1 << (16 * k))
-            return acc + packed
+    def _nibble_fold(i: int) -> str:
+        # nibble i's 4 bits, bit k into 16-bit lane k of one long
+        v = f"CAST(conv(substring(h, {i}, 1), 16, 10) AS BIGINT)"
+        packed = "CAST(0 AS BIGINT)"
+        for k in range(4):
+            bit = f"(CAST(floor({v} / {2**k}) AS BIGINT) % 2)"
+            packed = f"({packed} + ({bit} * {1 << (16 * k)}))"
+        return f"aggregate(_shm_h, CAST(0 AS BIGINT), (acc, h) -> acc + {packed})"
 
-        return fold
-
-    for i in range(1, 17):
-        df = df.withColumn(
-            f"_shm_p{i}", F.aggregate(F.col("_shm_h"), F.lit(0).cast("long"), _nibble_fold(i))
-        )
-    n = F.size(F.col("_shm_h"))
+    packs = {f"_shm_p{i}": F.expr(_nibble_fold(i)) for i in range(1, 17)}
+    df = df.withColumns(packs)
     chars = []
     for i in range(1, 17):
-        nib = F.lit(0)
+        nib = "0"
         for k in range(4):
-            cnt = F.shiftrightunsigned(F.col(f"_shm_p{i}"), 16 * k).bitwiseAND(F.lit(0xFFFF))
-            nib = nib + F.when(cnt * 2 > n, F.lit(1 << k)).otherwise(F.lit(0))
-        chars.append(F.substr(F.lit(HEX_ALPHABET), nib + 1, F.lit(1)))
-    return df.withColumn(out_col, F.concat(*chars)).drop(
-        "_shm_h", *[f"_shm_p{i}" for i in range(1, 17)]
-    )
+            cnt = f"(shiftrightunsigned(_shm_p{i}, {16 * k}) & 65535)"
+            nib = f"({nib} + CASE WHEN ({cnt} * 2) > size(_shm_h) THEN {1 << k} ELSE 0 END)"
+        chars.append(f"substr('{HEX_ALPHABET}', {nib} + 1, 1)")
+    sig = F.expr(f"concat({', '.join(chars)})")
+    return df.withColumn(out_col, sig).drop("_shm_h", *packs)
 
 
 # ------------------------------------------------------------------ components
@@ -550,17 +551,18 @@ _TRUNCATE_EVERY = 8
 SMALL_GRAPH_EDGES = 100_000
 
 
-def _small_graph_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+def _small_graph_components(
+    pairs: DataFrame, rows: list, a_col: str, b_col: str
+) -> DataFrame:
     """Exact driver-side resolution for SMALL pair graphs: union-find with
-    path compression over the collected edge list, labels = the minimum id
-    reachable — value-identical to the converged label-propagation loop
-    (which computes the same min-reachable-id fixpoint), with none of the
-    loop's per-round job waves. Returns the contract frame: PERSISTED
-    (id, component) with the ids' dtype, plus a no-op
-    ``sparklead_release_scratch``."""
+    path compression over the collected edge ``rows`` of ``pairs``, labels
+    = the minimum id reachable — value-identical to the converged
+    label-propagation loop (which computes the same min-reachable-id
+    fixpoint), with none of the loop's per-round job waves. Returns the
+    contract frame: PERSISTED (id, component) with the ids' dtype, plus a
+    no-op ``sparklead_release_scratch``."""
     from pyspark.sql.types import StructField, StructType
 
-    rows = pairs.select(a_col, b_col).collect()
     parent: dict = {}
 
     def find(x):
@@ -675,14 +677,17 @@ def neardup_components(
     # fixpoint; pinned against the loop in tests/test_round9.py). This is
     # the broadcast-join philosophy applied to the component step — a
     # bounded, threshold-guarded driver collect, the same size class as
-    # the library's documented cutoff/template collects. The count costs
-    # one evaluation of ``pairs``, which the documented callers
-    # (neardup_text_dedup, the gate entries) already hold persisted or as
-    # literal rows; pass ``small_graph_edges=None`` to skip straight to
-    # the distributed loop when the pair frame is expensive and known big.
+    # the library's documented cutoff/template collects. ONE limited
+    # collect both sizes and fetches the edges, so ``pairs`` is evaluated
+    # once (a count() before the collect read a nondeterministic lineage
+    # twice, and the two reads could disagree); more than
+    # ``small_graph_edges`` rows back means "big graph" and the loop runs.
+    # Pass ``small_graph_edges=None`` to skip straight to the distributed
+    # loop when the pair frame is expensive and known big.
     if small_graph_edges:
-        if pairs.count() <= small_graph_edges:
-            return _small_graph_components(pairs, a_col, b_col)
+        rows = pairs.select(a_col, b_col).limit(small_graph_edges + 1).collect()
+        if len(rows) <= small_graph_edges:
+            return _small_graph_components(pairs, rows, a_col, b_col)
 
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))

@@ -101,29 +101,29 @@ def token_vectors(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     # lambda then evaluates element_at(_s, 0) -> INVALID_INDEX_OF_ZERO,
     # killing the whole staged pipeline on a single empty pre-tokenized
     # sequence. Empty docs short-circuit to empty vocab/counts (simhash 0).
-    empty_ints = F.array().cast("array<int>")
+    # The run expressions are SQL strings for the same reason as the SimHash
+    # folds (see dedup._majority_vote_sql): each Column operator is a py4j
+    # round-trip, and this builder runs once per staged job.
+    empty_ints = "CAST(array() AS ARRAY<INT>)"
+    starts = (
+        f"CASE WHEN size(_s) = 0 THEN {empty_ints} ELSE filter("
+        "sequence(1, greatest(size(_s), 1)), "
+        "i -> (i = 1) OR (element_at(_s, i) != element_at(_s, i - 1))) END"
+    )
     staged = with_simhash(
-        df.withColumn("_s", F.array_sort("tokens"))
-        .withColumn(
-            "_starts",
-            F.when(F.size("_s") == 0, empty_ints).otherwise(
-                F.filter(
-                    F.sequence(F.lit(1), F.greatest(F.size("_s"), F.lit(1))),
-                    lambda i: (i == 1) | (F.element_at(F.col("_s"), i) != F.element_at(F.col("_s"), i - 1)),
-                )
-            ),
-        ),
+        df.withColumn("_s", F.array_sort("tokens")).withColumn("_starts", F.expr(starts)),
         "tokens",
     )
-    next_starts = F.when(F.size("_starts") == 0, empty_ints).otherwise(
-        F.concat(F.slice("_starts", 2, 1 << 30), F.array(F.size("_s") + 1))
+    next_starts = (
+        f"CASE WHEN size(_starts) = 0 THEN {empty_ints} ELSE "
+        f"concat(slice(_starts, 2, {1 << 30}), array(size(_s) + 1)) END"
     )
     return staged.select(
         "doc_id",
         "source",
         *keep,
-        F.transform("_starts", lambda i: F.element_at(F.col("_s"), i)).alias("vocab"),
-        F.zip_with(next_starts, F.col("_starts"), lambda b, a: b - a).alias("counts"),
+        F.expr("transform(_starts, i -> element_at(_s, i)) AS vocab"),
+        F.expr(f"zip_with({next_starts}, _starts, (b, a) -> b - a) AS counts"),
         "simhash",
     )
 

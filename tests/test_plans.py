@@ -157,3 +157,35 @@ def test_mixture_sample_application_no_payload_shuffle(spark):
     # earlier `\S*partitioning` regex could not catch it: round-7 review)
     shuffles = re.findall(r"(?<!Broadcast)(?<!Reused)Exchange\b[^\n]*", p)
     assert shuffles == [], shuffles
+
+
+# Plan-construction cost: every Column/DataFrame call is one or more py4j
+# round-trips (0.1-0.25 ms each), so a builder that unrolls a wide
+# expression call by call pays for it on the driver before any executor
+# starts. The SimHash lanes build their folds and votes as SQL strings;
+# these bounds catch a return to per-literal Column construction (those
+# builds took 7.9k-11.5k calls; the SQL-string builds take 166-206).
+_MAX_BUILD_CALLS = 500
+
+
+@pytest.mark.parametrize(
+    "builder", ["with_simhash", "simhash_signatures", "with_simhash_md5"]
+)
+def test_simhash_plan_build_gateway_calls(spark, gateway_calls, builder):
+    from sparklead import dedup
+
+    docs = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["x"])], "doc_id int, toks array<string>"
+    )
+    with gateway_calls() as calls:
+        getattr(dedup, builder)(docs, "toks")
+    assert 0 < calls.n <= _MAX_BUILD_CALLS, calls.n
+
+
+def test_token_vectors_plan_build_gateway_calls(spark, gateway_calls):
+    from sparklead.pipeline import token_vectors
+
+    enr = enrich_stage(parse_stage(synth.pretokenized(spark, 20)), synth.source_meta(spark))
+    with gateway_calls() as calls:
+        token_vectors(enr, keep=("n_tok",))
+    assert 0 < calls.n <= _MAX_BUILD_CALLS, calls.n

@@ -505,10 +505,12 @@ def with_simhash_md5(
     the nibble's 4 bit-counters into one long (16-bit lanes, same trick as
     with_simhash, same <65,536-token cap)."""
     assert max_tokens < 65_536, "lane counters are 16-bit; the cap must stay under 65,536"
+    # NULL tokens are dropped after the cap: md5(NULL) would NULL every
+    # nibble fold and sign the whole doc 0000000000000000
     df = df.withColumn(
         "_shm_h",
         F.transform(
-            F.slice(F.col(tokens_col), 1, max_tokens),
+            F.filter(F.slice(F.col(tokens_col), 1, max_tokens), lambda t: t.isNotNull()),
             lambda t: F.substring(F.md5(t), 1, 16),
         ),
     )

@@ -217,19 +217,34 @@ class AnomalyDetector:
                 f"unknown model {model!r}; choose from {sorted(set(_SPARK_MODELS) | _SKLEARN_MODELS)}"
             )
         self.kind = model
-        feats = self.featurizer.fit(train_df).transform(train_df)
-        if model in _SPARK_MODELS:
-            import importlib
+        # The featurizer fit, its transform and the estimator each read the
+        # train frame, and an ML estimator reads it several times (LR: two
+        # passes before the L-BFGS loop, two for the training summary). On
+        # a lazy df_seq every read re-runs the whole event lineage (scan,
+        # masking regexes, the Drain UDF, the groupBy(seq_id) shuffle), so
+        # the columns the featurizer reads are materialized ONCE for this
+        # call and released before it returns. A frame the caller already
+        # cached is read as-is and stays the caller's.
+        f = self.featurizer
+        owned = not train_df.is_cached
+        if owned:
+            cols = [f.item_col] if f.item_col else []
+            train_df = train_df.select(*dict.fromkeys([*cols, *f.numeric_cols, f.label_col])).persist()
+        try:
+            feats = f.fit(train_df).transform(train_df)
+            if model in _SPARK_MODELS:
+                import importlib
 
-            mod, cls, supervised = _SPARK_MODELS[model]
-            est = getattr(importlib.import_module(mod), cls)(
-                featuresCol="features", **({"labelCol": "label"} if supervised else {"k": 2, "seed": 42}), **params
-            )
-            self.model = est.fit(feats)
-        elif model in _SKLEARN_MODELS:
-            self.model = self._fit_sklearn(model, feats, **params)
-        else:
-            raise ValueError(f"unknown model {model}")
+                mod, cls, supervised = _SPARK_MODELS[model]
+                est = getattr(importlib.import_module(mod), cls)(
+                    featuresCol="features", **({"labelCol": "label"} if supervised else {"k": 2, "seed": 42}), **params
+                )
+                self.model = est.fit(feats)
+            else:
+                self.model = self._fit_sklearn(model, feats, **params)
+        finally:
+            if owned:
+                train_df.unpersist()
         return self
 
     def _fit_sklearn(self, model: str, feats: DataFrame, **params):

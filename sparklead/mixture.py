@@ -141,7 +141,11 @@ def token_budget_cutoffs(
     spark = docs.sparkSession
     # validates BEFORE any persist
     bud = _budgets_df(docs, budgets, source_col, max_sources)
-    narrow = docs.select(
+    # NULL-source rows match no budget and are never kept; left in the
+    # global order they would add their tokens to every source's _gcum,
+    # which the data-derived offsets cancel but ``source_totals`` (keyed
+    # by source) cannot
+    narrow = docs.filter(F.col(source_col).isNotNull()).select(
         F.col(key_col),
         F.col(source_col),
         F.col(size_col).cast("long").alias("_sz"),
@@ -179,12 +183,14 @@ def token_budget_cutoffs(
         # CONTRACT: must be the EXACT sum of ``size_col`` per source for
         # EVERY source present in ``docs`` (not only budgeted ones —
         # unbudgeted sources' rows still occupy the global cumsum order,
-        # so their totals shift every later source's offset).
+        # so their totals shift every later source's offset); a missing
+        # one fails the job below. A None key (a NULL-source group) is
+        # ignored: NULL-source rows are not in the order.
         from pyspark.sql.types import LongType, StructField, StructType
 
         acc = 0
         rows = []
-        for s in sorted(source_totals):
+        for s in sorted(k for k in source_totals if k is not None):
             rows.append((s, acc))
             acc += int(source_totals[s])
         off_schema = StructType(
@@ -205,9 +211,24 @@ def token_budget_cutoffs(
                 F.coalesce(F.sum("_t").over(off_w), F.lit(0)).alias("_soff"),
             )
         )
+    # LEFT join + raise_error: a source missing from the offsets (only
+    # possible with ``source_totals``) fails the job, naming the source.
+    # Dropping its rows would be silent, and their tokens would still
+    # shift every later source's _gcum. Checked inside the cutoffs job
+    # itself: no extra job.
+    soff = F.when(
+        F.col("_soff").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit("source_totals has no entry for source "),
+                F.col(source_col).cast("string"),
+                F.lit(" (it must cover every source present in docs)"),
+            )
+        ),
+    ).otherwise(F.col("_soff"))
     kept = (
-        g.join(F.broadcast(offsets), source_col)
-        .withColumn("_cum", F.col("_gcum") - F.col("_soff"))
+        g.join(F.broadcast(offsets), source_col, "left")
+        .withColumn("_cum", F.col("_gcum") - soff)
         .join(F.broadcast(bud), source_col)
         .filter(F.col("_cum") <= F.col(BUDGET_COL))
     )

@@ -152,7 +152,13 @@ def pack_assignments(
             if len(pdf) == 0:
                 continue
             sizes = pdf[size_col].to_numpy()
-            key_arrs = [pdf[c].to_numpy() for c in bcols]
+            # NULL keys arrive as NaN/NaT, and NaN != NaN would reset the
+            # walk on every NULL-key row: map them to None, so the NULL
+            # bucket is walked like any other
+            key_arrs = [
+                [None if na else v for v, na in zip(pdf[c].to_numpy(), pdf[c].isna().to_numpy())]
+                for c in bcols
+            ]
             ids = []
             for i in range(len(pdf)):
                 k = tuple(a[i] for a in key_arrs)

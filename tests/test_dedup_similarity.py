@@ -151,11 +151,13 @@ _GOLDEN_XX = {
         "mixed": 8480566621760862361,
     },
 }
+# null_tok read 0000000000000000 before NULL tokens were filtered out of
+# the md5 lane: md5(NULL) nulled every nibble fold
 _GOLDEN_MD5 = {
     65_535: {
         "empty": "0000000000000000",
         "null_arr": "0000000000000000",
-        "null_tok": "0000000000000000",
+        "null_tok": "081342a011101eb2",
         "one": "5653c6b1f51852a6",
         "neg1": "92f5e510aa4d1b66",
         "neg2": "3b554a8edb94a2e7",
@@ -169,7 +171,7 @@ _GOLDEN_MD5 = {
     8: {
         "empty": "0000000000000000",
         "null_arr": "0000000000000000",
-        "null_tok": "0000000000000000",
+        "null_tok": "081342a011101eb2",
         "one": "5653c6b1f51852a6",
         "neg1": "92f5e510aa4d1b66",
         "neg2": "3b554a8edb94a2e7",
@@ -204,6 +206,11 @@ def test_simhash_lanes_golden_values(spark, max_tokens):
     assert {r["doc_id"]: r["simhash"] for r in ws.collect()} == _GOLDEN_XX[max_tokens]
     assert {r["id"]: r["simhash"] for r in ss.collect()} == _GOLDEN_XX[max_tokens]
     assert {r["doc_id"]: r["simhash"] for r in md.collect()} == _GOLDEN_MD5[max_tokens]
+    # a NULL token neither votes nor counts toward n: the md5 lane signs
+    # ["alpha", NULL, "beta"] exactly like ["alpha", "beta"]
+    pair = spark.createDataFrame([(["alpha", "beta"],)], "toks array<string>")
+    pair_sig = dedup.with_simhash_md5(pair, "toks", max_tokens=max_tokens).first()["simhash"]
+    assert pair_sig == _GOLDEN_MD5[max_tokens]["null_tok"]
 
 
 # ------------------------------------------------- lang_id monster doc

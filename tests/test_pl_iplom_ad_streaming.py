@@ -108,6 +108,74 @@ def test_kmeans_unsupervised_runs(labeled_seq):
     assert set(r["pred_ano"] for r in out.select("pred_ano").distinct().collect()) <= {0, 1}
 
 
+def _counted_seqs(spark, n=60):
+    """A labelled sequence frame whose ``seq_len`` goes through a plain
+    Python UDF that counts its evaluations in an accumulator: every pass
+    over the frame's lineage that reads ``seq_len`` adds ``n``."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        evals.add(1)
+        return v
+
+    seq = spark.range(n).select(
+        F.col("id").alias("seq_id"),
+        F.when(F.col("id") % 4 == 0, F.array(F.lit("E1"), F.lit("E_bad")))
+        .otherwise(F.array(F.lit("E1"), F.lit("E2"), F.lit("E3")))
+        .alias("events"),
+        (F.col("id") % 4 == 0).alias("anomaly"),
+    )
+    return seq.withColumn("seq_len", F.udf(counted, "int")(F.size("events"))), evals
+
+
+def _lr_detector():
+    return AnomalyDetector(SeqFeaturizer(item_col="events", numeric_cols=("seq_len",)))
+
+
+def test_train_reads_the_lineage_once(spark):
+    """The featurizer fit, its transform and the estimator's passes (LR
+    reads its input four times) all read ONE materialization of the train
+    frame, so its upstream lineage is evaluated once per ``train``."""
+    seq, evals = _counted_seqs(spark)
+    det = _lr_detector().train(seq, "LR")
+    assert evals.value == 60
+    assert evaluate(det.predict(seq))["f1"] == 1.0
+
+
+def test_train_leaves_no_persisted_frame(spark):
+    """``train`` unpersists what it persisted, also when the fit raises;
+    ``predict`` and ``evaluate`` persist nothing."""
+    from pyspark.errors import IllegalArgumentException
+
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    seq, _ = _counted_seqs(spark)
+    det = _lr_detector().train(seq, "LR")
+    assert jsc.getPersistentRDDs().size() == 0
+    evaluate(det.predict(seq))
+    assert jsc.getPersistentRDDs().size() == 0
+    with pytest.raises(IllegalArgumentException, match="maxIter"):
+        _lr_detector().train(seq, "LR", maxIter=-1)
+    assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_train_keeps_a_caller_persisted_frame(spark):
+    """A train frame the caller persisted is read as-is (no second
+    materialization: the UDF is not evaluated again) and stays cached."""
+    from pyspark import StorageLevel
+
+    seq, evals = _counted_seqs(spark)
+    seq.persist()
+    try:
+        seq.count()
+        before = evals.value
+        _lr_detector().train(seq, "LR")
+        assert evals.value == before
+        assert seq.is_cached and seq.storageLevel != StorageLevel.NONE
+    finally:
+        seq.unpersist()
+
+
 # ------------------------------------------------------------------ streaming
 
 def test_stream_route_matches_batch(spark, tmp_path):

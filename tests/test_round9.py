@@ -128,6 +128,36 @@ def test_mixture_source_totals_passthrough(spark):
         assert ka == kb and len(ka) > 0
 
 
+@pytest.mark.parametrize("budgeted", [True, False])
+def test_mixture_source_totals_missing_source_fails(spark, budgeted):
+    """A non-NULL source present in ``docs`` but absent from
+    ``source_totals`` must fail the call, naming the source — budgeted or
+    not: its rows still sit in the global cumsum order, so dropping them
+    would also shift every later source's cutoff. NULL-source rows are not
+    a missing source: they are dropped, and with exact totals the sample
+    equals the one computed without ``source_totals``."""
+    from pyspark.errors import SparkRuntimeException
+
+    from sparklead.mixture import sample_to_token_budget
+
+    rows = [(i, f"src{i % 3}", 5) for i in range(30)] + [(100, None, 5)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, n_tok int")
+    budgets = {"src0": 20, "src2": 20}
+    if budgeted:
+        budgets["src1"] = 20
+    partial = {"src0": 50, "src2": 50}
+    for fast in (True, False):
+        with pytest.raises(SparkRuntimeException, match="no entry for source src1"):
+            sample_to_token_budget(docs, budgets, fast=fast, source_totals=partial)
+    full = {"src0": 50, "src1": 50, "src2": 50}
+    # a None key (the NULL-source group of a groupBy) is accepted and ignored
+    for fast in (True, False):
+        kept = {r["doc_id"] for r in sample_to_token_budget(docs, budgets, fast=fast).collect()}
+        for totals in (full, {**full, None: 5}):
+            b = sample_to_token_budget(docs, budgets, fast=fast, source_totals=totals)
+            assert {r["doc_id"] for r in b.collect()} == kept
+
+
 def test_scrub_with_stats_matches_two_verb_join(spark):
     """The one-pass scrub_with_stats must equal substring_dup_stats JOIN
     scrub_duplicate_substrings column-for-column (both lanes)."""
@@ -214,3 +244,16 @@ def test_pack_assignments_partition_pass_matches_grouped_walk(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert c == a
+
+
+def test_pack_assignments_null_bucket_key_respects_cap(spark):
+    """NULL bucket keys form ONE bucket walked like any other. A NULL int
+    key reaches pandas as float NaN, and NaN != NaN, so an unnormalized
+    walk reset to pack 0 on every NULL-key row: all three 600-token rows
+    shared pack 0 (1800 tokens at a 1000 cap)."""
+    from sparklead.packing import PACK_ID, pack_assignments
+
+    rows = [(None, i, 600) for i in range(3)] + [(1, 10, 600), (1, 11, 300)]
+    df = spark.createDataFrame(rows, "k int, doc_id long, n_tok int")
+    got = {r["doc_id"]: r[PACK_ID] for r in pack_assignments(df, 1000, ("k",)).collect()}
+    assert got == {0: 0, 1: 1, 2: 2, 10: 0, 11: 0}

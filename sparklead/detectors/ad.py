@@ -223,13 +223,12 @@ class AnomalyDetector:
         # a lazy df_seq every read re-runs the whole event lineage (scan,
         # masking regexes, the Drain UDF, the groupBy(seq_id) shuffle), so
         # the columns the featurizer reads are materialized ONCE for this
-        # call and released before it returns. A frame the caller already
-        # cached is read as-is and stays the caller's.
+        # call and released before it returns. Over a frame the caller
+        # cached, the projection reads the caller's cache, and unpersisting
+        # the projection leaves the caller's entry cached.
         f = self.featurizer
-        owned = not train_df.is_cached
-        if owned:
-            cols = [f.item_col] if f.item_col else []
-            train_df = train_df.select(*dict.fromkeys([*cols, *f.numeric_cols, f.label_col])).persist()
+        cols = [f.item_col] if f.item_col else []
+        train_df = train_df.select(*dict.fromkeys([*cols, *f.numeric_cols, f.label_col])).persist()
         try:
             feats = f.fit(train_df).transform(train_df)
             if model in _SPARK_MODELS:
@@ -243,8 +242,7 @@ class AnomalyDetector:
             else:
                 self.model = self._fit_sklearn(model, feats, **params)
         finally:
-            if owned:
-                train_df.unpersist()
+            train_df.unpersist()
         return self
 
     def _fit_sklearn(self, model: str, feats: DataFrame, **params):

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, FloatType, LongType, StructField, StructType
 
 CHUNK_IDX = "chunk_idx"
 PACK_ID = "pack_id"
@@ -120,7 +120,14 @@ def pack_assignments(
     occupy a pack of their own — the greedy rule degrades safely instead
     of erroring."""
     cols = [*bucket_cols, *order_cols, size_col]
-    narrow = df.select(*cols)
+    # Arrow hands a float key's NULL and NaN both to pandas as NaN, while
+    # Spark keeps them two buckets: carry an isNull flag for float keys
+    null_flags = {
+        f.name: f"_pk_null{i}"
+        for i, f in enumerate(df.select(*bucket_cols).schema.fields)
+        if isinstance(f.dataType, (FloatType, DoubleType))
+    }
+    narrow = df.select(*cols, *[F.col(c).isNull().alias(n) for c, n in null_flags.items()])
     # build a FRESH StructType: StructType.add mutates in place, and
     # df.schema hands back the plan's cached instance
     out_schema = StructType(
@@ -153,12 +160,13 @@ def pack_assignments(
                 continue
             sizes = pdf[size_col].to_numpy()
             # NULL keys arrive as NaN/NaT, and NaN != NaN would reset the
-            # walk on every NULL-key row: map them to None, so the NULL
-            # bucket is walked like any other
-            key_arrs = [
-                [None if na else v for v, na in zip(pdf[c].to_numpy(), pdf[c].isna().to_numpy())]
-                for c in bcols
-            ]
+            # walk on every such row: key NULL as None and a float NaN as
+            # "NaN", so each is one bucket walked like any other
+            key_arrs = []
+            for c in bcols:
+                vals, na = pdf[c].to_numpy(), pdf[c].isna().to_numpy()
+                nulls = pdf[null_flags[c]].to_numpy() if c in null_flags else na
+                key_arrs.append([None if n else "NaN" if a else v for v, a, n in zip(vals, na, nulls)])
             ids = []
             for i in range(len(pdf)):
                 k = tuple(a[i] for a in key_arrs)
@@ -180,7 +188,7 @@ def pack_assignments(
         narrow.repartition(*[F.col(c) for c in bcols])
         .sortWithinPartitions(*bcols, *order_cols)
         .mapInPandas(walk, schema=out_schema)
-        .drop(size_col)
+        .drop(size_col, *null_flags.values())
     )
 
 

@@ -250,10 +250,21 @@ def test_pack_assignments_null_bucket_key_respects_cap(spark):
     """NULL bucket keys form ONE bucket walked like any other. A NULL int
     key reaches pandas as float NaN, and NaN != NaN, so an unnormalized
     walk reset to pack 0 on every NULL-key row: all three 600-token rows
-    shared pack 0 (1800 tokens at a 1000 cap)."""
+    shared pack 0 (1800 tokens at a 1000 cap). A float key hands both NULL
+    and a real NaN to pandas as NaN, yet Spark keeps them two buckets
+    (sorted NULL first, NaN last): the NaN row starts its own pack 0
+    instead of carrying on the NULL bucket's walk."""
     from sparklead.packing import PACK_ID, pack_assignments
 
     rows = [(None, i, 600) for i in range(3)] + [(1, 10, 600), (1, 11, 300)]
     df = spark.createDataFrame(rows, "k int, doc_id long, n_tok int")
     got = {r["doc_id"]: r[PACK_ID] for r in pack_assignments(df, 1000, ("k",)).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 10: 0, 11: 0}
+
+    # no other key, so no bucket sorts between the NULL and the NaN rows
+    rows = [(None, i, 600) for i in range(3)] + [(float("nan"), 20, 300)]
+    df = spark.createDataFrame(rows, "k double, doc_id long, n_tok int")
+    out = pack_assignments(df, 1000, ("k",))
+    assert out.columns == ["k", "doc_id", PACK_ID]
+    got = {r["doc_id"]: r[PACK_ID] for r in out.collect()}
+    assert got == {0: 0, 1: 1, 2: 2, 20: 0}

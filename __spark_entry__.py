@@ -1103,7 +1103,7 @@ def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (md5-min per salt) — engine-portable, oracle-checked.
 
-    _fan added round-4 on A/B evidence (tools/fan_ab.py): fanned 0.434 s vs
+    _fan added round-4 on A/B evidence (BENCH.md "Round-4 measurements"): fanned 0.434 s vs
     plain 0.524 s median-of-5 at sf0.1/local[32] — the post-filter input
     collapses to one split and the per-row shingle×salt md5 fold is exactly
     the compute _fan exists for (narrow, no downstream shuffle)."""
@@ -1266,7 +1266,7 @@ def _q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 8: the GATE entry merged into ivf_topk (third tagged method);
     this stays as the 1:1-comparable standalone bench line.
 
-    No _fan (round-4 A/B, tools/fan_ab.py): fanned 0.996 s vs plain 0.967 s
+    No _fan (round-4 A/B, BENCH.md "Round-4 measurements"): fanned 0.996 s vs plain 0.967 s
     median-of-5 at sf0.1/local[32] — indistinguishable, because the NLJ
     output shuffle (the per-query window) dominates, not the corpus-side
     scoring. And at scale the corpus arrives in many row groups, where a
@@ -1489,9 +1489,9 @@ def _decontam_eval_set(docs: DataFrame) -> DataFrame:
     """The decontamination fixture's eval set, derived from the corpus
     itself (fully SQL-replayable): docs with doc_id%23==0 verbatim, docs
     with doc_id%23==7 as their first-half token prefix. ONE definition
-    (round-7 review fix) shared by the gated entry, the fast bench lane,
-    and tools/fan_ab.py — three hand-maintained copies could drift from
-    the DuckDB oracle string silently."""
+    (round-7 review fix) shared by the gated entry and the fast bench
+    lane — hand-maintained copies could drift from the DuckDB oracle
+    string silently."""
     w = F.split("text", " ")
     return docs.filter(F.col("doc_id") % 23 == 0).select("text").unionByName(
         docs.filter(F.col("doc_id") % 23 == 7).select(

@@ -901,7 +901,8 @@ def neardup_text_dedup(
     LAZY on purpose — at 100 TB a corpus-sized cache is the thing that
     doesn't fit, while its recompute is one scan + hash-agg.
 
-    Measured (tools/persist_ab_scale.py, same-session interleaved
+    Measured (BENCH.md "Round-7: neardup_text_dedup cache discipline",
+    same-session interleaved
     medians-of-3 at local[8]): persist wins 33.2 s -> 25.0 s at 200k docs
     (the re-evaluation cost is real at scale), is NEUTRAL at 20k
     (11.8 vs 11.9 s — re-evaluation and cache costs cancel), and LOSES

@@ -19,7 +19,7 @@ vectorizable'):
      key = (length, root_freq, root_count), ties by first position, the
      reference's stable-sort order.
   3. template per cluster: position-wise countDistinct==1 ? first : '<*>'
-     — same aggregate as PL-IPLoM.
+     — mining/keyed.py:key_templates, shared with IPLoM and PL-IPLoM.
 
 Refinement parity (round 3): the reference's down_split child refinement
 (Brain.py:331-374) is the ``threshold`` parameter — positions with fewer
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparklead.mining.two_phase import template_id_col
+from sparklead.mining.keyed import assign_by_key, key_templates, pos_cardinalities
 
 
 def parse_brain(
@@ -103,13 +103,9 @@ def parse_brain(
         # down_split child refinement: positions with 1 < n_distinct <
         # threshold stay constant, so the cluster key gains those tokens —
         # one extra agg + broadcast join, no driver loop
-        nd = (
-            keyed.select("_cluster", F.posexplode(tokens_col).alias("pos", "tok"))
-            .groupBy("_cluster", "pos")
-            .agg(F.countDistinct("tok").alias("nd"))
-        )
         split_pos = (
-            nd.filter((F.col("nd") > 1) & (F.col("nd") < threshold))
+            pos_cardinalities(keyed, "_cluster", tokens_col)
+            .filter((F.col("d") > 1) & (F.col("d") < threshold))
             .groupBy("_cluster")
             .agg(F.array_sort(F.collect_list("pos")).alias("_sp"))
         )
@@ -127,50 +123,19 @@ def parse_brain(
             ).otherwise(F.col("_cluster")),
         ).drop("_sp")
     # template per cluster: position-wise constant-or-wildcard; constants
-    # containing digits mask to '<*>' (partial-constant rule) when enabled
-    t_expr = F.when(F.countDistinct("tok") == 1, F.first("tok")).otherwise(F.lit("<*>"))
-    per_pos = (
-        keyed.select("_cluster", F.posexplode(tokens_col).alias("pos", "tok"))
-        .groupBy("_cluster", "pos")
-        .agg(t_expr.alias("t"))
-    )
-    if exclude_digits:
-        per_pos = per_pos.withColumn(
-            "t", F.when(F.col("t").rlike(r"\d"), F.lit("<*>")).otherwise(F.col("t"))
-        )
-    cluster_templates = per_pos.groupBy("_cluster").agg(
-        F.concat_ws(
-            " ", F.transform(F.array_sort(F.collect_list(F.struct("pos", "t"))), lambda s: s["t"])
-        ).alias("template")
+    # containing digits mask to '<*>' (partial-constant rule) when enabled.
+    # The cluster -> template mapping is CLUSTER-COUNT-sized: assign_by_key
+    # collects it while ``keyed`` is persisted and joins the ids back as
+    # literals, so no cached data-sized frame outlives the call.
+    assigned, mp = assign_by_key(
+        keyed,
+        "_cluster",
+        lambda k: key_templates(k, "_cluster", tokens_col, mask_digits=exclude_digits),
+        out_col,
     )
     # clusters whose (post-mask) templates coincide MERGE — the reference
     # keys template_set by the final template tuple (Brain.py:395-397)
-    mapping = cluster_templates.withColumn("template_id", template_id_col("template"))
-    sizes = keyed.groupBy("_cluster").agg(F.count(F.lit(1)).alias("cluster_size"))
-    # The cluster -> template mapping is CLUSTER-COUNT-sized (a template
-    # table), so it is collected ONCE while ``keyed`` is persisted and
-    # re-emitted as literal rows (round-4 cache-hygiene fix): the returned
-    # frames carry no reference to any cached data-sized frame —
-    # getPersistentRDDs() is empty after parse_brain returns — and the
-    # assignment join is a guaranteed broadcast of literals. ``assigned``
-    # recomputes the (deterministic, content-keyed) cluster lineage once
-    # when the caller materializes it.
-    spark = df.sparkSession
-    keyed = keyed.persist()
-    try:
-        mapping_sized = mapping.join(sizes, "_cluster").select(
-            "_cluster", "template_id", "template", "cluster_size"
-        )
-        map_rows = mapping_sized.collect()
-        mp = spark.createDataFrame(map_rows, mapping_sized.schema)
-    finally:
-        keyed.unpersist()
     template_table = mp.groupBy("template_id", "template").agg(
-        F.sum("cluster_size").alias("cluster_size")
+        F.sum("part_len").alias("cluster_size")
     )
-    from pyspark.sql.functions import broadcast
-
-    assigned = keyed.join(
-        broadcast(mp.select("_cluster", F.col("template_id").alias(out_col))), "_cluster", "left"
-    ).drop("_cluster", "_root", "_lid", "_len")
-    return assigned, template_table.select("template_id", "template", "cluster_size")
+    return assigned.drop("_root", "_lid", "_len"), template_table

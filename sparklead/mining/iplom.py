@@ -4,9 +4,9 @@ Reference: /root/reference/loglead/parsers/iplom/IPLoM.py (driver-looped,
 one Python list per partition). Steps and their Spark shapes:
 
   S1 (:156-201)  partition by token count            -> part_key column
-  S2 (:204-262)  ONE split on the position with the  -> posexplode + groupBy
-                 fewest (>1) distinct tokens            argmin + broadcast join
-                 (partitions <= step2Support skip)
+  S2 (:204-262)  ONE split on the position with the  -> keyed.split_round:
+                 fewest (>1) distinct tokens            posexplode + groupBy
+                 (partitions <= step2Support skip)      argmin + join
   S3 (:264-459)  bijection split: pick positions      -> pair-relation stats are
                  (p1,p2) by cardinality-frequency       two groupBy aggs; the
                  (DetermineP1P2 :556-673), classify     (p1,p2) choice runs on
@@ -14,8 +14,9 @@ one Python list per partition). Steps and their Spark shapes:
                  1-M / M-1 / M-M, split on the side     column-cardinality table
                  chosen by Get_Rank_Posistion           (partition-count-sized,
                  (:525-554)                             like a template table)
-  S4 (:461-502)  template: per position,              -> same aggregate as
-                 countDistinct==1 ? token : '<*>'       PL-IPLoM
+  S4 (:461-502)  template: per position,              -> keyed.key_templates,
+                 countDistinct==1 ? token : '<*>'       shared with PL-IPLoM
+                                                        and Brain
 
 Differences from the reference, by design:
   * tokenization is the caller's token-array column (the reference re-splits
@@ -35,63 +36,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparklead.mining.two_phase import template_id_col
+from sparklead.mining.keyed import (
+    assign_by_key,
+    flag_outliers,
+    key_templates,
+    pos_cardinalities,
+    split_round,
+)
 
 
-def _pos_cardinalities(base: DataFrame, tokens_col: str) -> DataFrame:
-    """(part_key, pos, d): distinct-token count per column of each partition."""
-    return (
-        base.select("part_key", F.posexplode(tokens_col).alias("pos", "tok"))
-        .groupBy("part_key", "pos")
-        .agg(F.countDistinct("tok").alias("d"))
-    )
-
-
-def _step2(base: DataFrame, tokens_col: str, step2_support: int) -> DataFrame:
-    """One S2 round: split each partition on the lowest-cardinality column
-    when that cardinality is > 1 (IPLoM.py:226-237: first position with the
-    strictly smallest distinct count). Adds ``_split2`` marking split parts."""
-    cards = _pos_cardinalities(base, tokens_col)
-    sizes = base.groupBy("part_key").agg(F.count(F.lit(1)).alias("n"))
-    split_pos = (
-        cards.groupBy("part_key")
-        .agg(F.min_by(F.struct("pos", "d"), F.struct("d", "pos")).alias("m"))
-        .join(sizes, "part_key")
-        .select(
-            "part_key",
-            F.when((F.col("m.d") > 1) & (F.col("n") > step2_support), F.col("m.pos")).alias("split_pos"),
-        )
-    )
-    # unhinted part_key-sized joins throughout this miner: bounded on
-    # masked logs, unbounded on degenerate corpora — AQE picks broadcast
-    # at runtime when the table is actually small
-    out = base.join(split_pos, "part_key", "left")
-    return (
-        out.withColumn("_split2", F.col("split_pos").isNotNull())
-        .withColumn(
-            "part_key",
-            F.when(
-                F.col("_split2"),
-                F.concat(
-                    F.col("part_key"), F.lit("|s2:"), F.element_at(F.col(tokens_col), F.col("split_pos") + 1)
-                ),
-            ).otherwise(F.col("part_key")),
-        )
-        .drop("split_pos")
-    )
-
-
-def _determine_p1p2(
-    card_rows: list, len_by_part: dict, split2_parts: set, ct: float
-) -> dict[str, tuple[int, int]]:
+def _determine_p1p2(card_rows: list, ct: float) -> dict[str, tuple[int, int]]:
     """Faithful port of DetermineP1P2 + Get_Mapping_Position
-    (IPLoM.py:556-673) over the collected cardinality table."""
+    (IPLoM.py:556-673) over the collected cardinality table. All rows of a
+    partition share one token count, so its length is its position count;
+    a partition was split in S2 when its key carries the ``|s`` tag (an S1
+    key, ``L<n>`` or PL-IPLoM's ``S1:<n>``, never does)."""
     by_part: dict[str, dict[int, int]] = {}
     for r in card_rows:
         by_part.setdefault(r["part_key"], {})[r["pos"]] = r["d"]
     out: dict[str, tuple[int, int]] = {}
     for part, cards in by_part.items():
-        n_len = len_by_part[part]
+        n_len = len(cards)
         if n_len == 2:
             out[part] = (0, 1)
             continue
@@ -109,7 +74,7 @@ def _determine_p1p2(
             d = cards[pos]
             freq[d] = freq.get(d, 0) + 1
         p1 = p2 = -1
-        if part in split2_parts:
+        if "|s" in (part or ""):
             # from step 2: the two cardinalities (>1) with the HIGHEST column
             # frequency (IPLoM.py:596-640)
             max_card = second_card = -1
@@ -170,16 +135,7 @@ def _step3(base: DataFrame, tokens_col: str, ct: float, lower: float, upper: flo
     the reference's 1-1 / 1-M / M-1 / M-M case analysis (IPLoM.py:362-440)
     expressed as a when-chain."""
     spark = base.sparkSession
-    cards_df = _pos_cardinalities(base, tokens_col)
-    lens = {
-        r["part_key"]: r["n_len"]
-        for r in base.groupBy("part_key").agg(F.max(F.size(tokens_col)).alias("n_len")).collect()
-    }
-    split2 = {
-        r["part_key"]
-        for r in base.filter(F.col("_split2")).select("part_key").distinct().collect()
-    }
-    p1p2 = _determine_p1p2(cards_df.collect(), lens, split2, ct)
+    p1p2 = _determine_p1p2(pos_cardinalities(base, "part_key", tokens_col).collect(), ct)
     if not p1p2:
         return base
     pp_df = spark.createDataFrame(
@@ -265,7 +221,7 @@ def _step3(base: DataFrame, tokens_col: str, ct: float, lower: float, upper: flo
         )
         # M-M: step-2 parts dump together (IPLoM.py:420-425); step-1 parts
         # split on the smaller leftover side (:427-440)
-        .when(F.col("_split2"), F.concat(F.col("part_key"), F.lit("|b:mm")))
+        .when(F.col("part_key").contains("|s"), F.concat(F.col("part_key"), F.lit("|b:mm")))
         .otherwise(
             F.concat(
                 F.col("part_key"),
@@ -290,32 +246,8 @@ def iplom_keyed(
 ) -> DataFrame:
     """S1 + S2 + S3: every row tagged with its final partition key."""
     base = df.withColumn("part_key", F.concat(F.lit("L"), F.size(tokens_col).cast("string")))
-    base = _step2(base, tokens_col, step2_support)
-    return _step3(base, tokens_col, ct, lower, upper).drop("_split2")
-
-
-def _s4_templates(base: DataFrame, tokens_col: str) -> DataFrame:
-    """Shared S4 aggregation over keyed rows: (part_key, template,
-    template_id, part_len). Template = per position countDistinct==1 ?
-    first : '<*>' (IPLoM.py:488-494). One definition for both the
-    templates-only path and parse_iplom's assignment path — the two used to
-    carry verbatim copies that could silently diverge (round-4 review fix)."""
-    per_pos = (
-        base.select("part_key", F.posexplode(tokens_col).alias("pos", "tok"))
-        .groupBy("part_key", "pos")
-        .agg(F.when(F.countDistinct("tok") == 1, F.first("tok")).otherwise(F.lit("<*>")).alias("t"))
-    )
-    templates = per_pos.groupBy("part_key").agg(
-        F.concat_ws(
-            " ", F.transform(F.array_sort(F.collect_list(F.struct("pos", "t"))), lambda s: s["t"])
-        ).alias("template")
-    )
-    sizes = base.groupBy("part_key").agg(F.count(F.lit(1)).alias("part_len"))
-    return (
-        templates.join(sizes, "part_key")
-        .withColumn("template_id", template_id_col("template"))
-        .select("part_key", "template_id", "template", "part_len")
-    )
+    base = split_round(base, tokens_col, "s2", step2_support)
+    return _step3(base, tokens_col, ct, lower, upper)
 
 
 def iplom_templates(
@@ -329,21 +261,9 @@ def iplom_templates(
     Template = per position countDistinct==1 ? first : '<*>' (IPLoM.py:
     488-494); PST folds under-supported partitions to outliers (:449-455)."""
     base = iplom_keyed(df.select(tokens_col), tokens_col, **kw)
-    out = _s4_templates(base, tokens_col)
+    out = key_templates(base, "part_key", tokens_col)
     if pst > 0:
-        # PST denominator from the sizes aggregate itself, not a count()
-        # job over the data. Round-6: 1-row agg + broadcast crossJoin (was
-        # an unbounded window — bounded here since the frame is
-        # template-sized, but the no-literal-partition-window invariant is
-        # now uniform and plan-gated, tests/test_entry.py).
-        from pyspark.sql.functions import broadcast
-
-        total = out.agg(F.sum("part_len").cast("double").alias("_pst_total"))
-        out = (
-            out.crossJoin(broadcast(total))
-            .withColumn("is_outlier", F.col("part_len") / F.col("_pst_total") < pst)
-            .drop("_pst_total")
-        )
+        out = flag_outliers(out, pst)
     return out.select("template_id", "template", "part_len", *(["is_outlier"] if pst > 0 else []))
 
 
@@ -353,28 +273,13 @@ def parse_iplom(
     out_col: str = "e_event_iplom_id",
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
-    """Assign template ids (row's key is a function of its own tokens + the
-    partition statistics, recomputed once and joined broadcast).
-
-    The template table (part_key -> template/id/size) is TEMPLATE-sized, so
-    it is collected while the keyed frame is persisted and re-emitted as
-    literal rows, then the keyed frame is unpersisted before returning
-    (round-4 cache-hygiene fix — the old permanent .cache() accreted
-    storage across corpora in long-lived sessions). ``part_key`` is a
-    deterministic function of row content + the S3 statistics (which are
-    embedded as plan literals by iplom_keyed), so ``assigned`` can safely
-    recompute the keyed lineage once when the caller materializes it; its
-    template join is a guaranteed broadcast of literals."""
-    from pyspark.sql.functions import broadcast
-
-    spark = df.sparkSession
-    keyed = iplom_keyed(df, tokens_col, **kw).persist()
-    try:
-        tpl_sized = _s4_templates(keyed, tokens_col)
-        tpl = spark.createDataFrame(tpl_sized.collect(), tpl_sized.schema)
-    finally:
-        keyed.unpersist()
-    assigned = keyed.join(
-        broadcast(tpl.select("part_key", F.col("template_id").alias(out_col))), "part_key", "left"
-    ).drop("part_key")
+    """Assign template ids: a row's key is a function of its own tokens and
+    the partition statistics (embedded as plan literals by iplom_keyed), so
+    the template-sized table is joined back by key (keyed.assign_by_key)."""
+    assigned, tpl = assign_by_key(
+        iplom_keyed(df, tokens_col, **kw),
+        "part_key",
+        lambda keyed: key_templates(keyed, "part_key", tokens_col),
+        out_col,
+    )
     return assigned, tpl.select("template_id", "template", "part_len")

@@ -215,7 +215,8 @@ def pack_tokenized(
     DELIBERATE TWO-EVALUATION TRADE (the ``jaccard_verify`` convention,
     round-7 advisor): the join-back references the chunked explode subplan
     on BOTH sides, and exchange reuse does not dedup it (measured —
-    tools/probe_reuse.py), so materializing the result evaluates the
+    BENCH.md "Round-7: neardup_text_dedup cache discipline"), so
+    materializing the result evaluates the
     scan+chunk explode twice. This is chosen over persisting the chunked
     frame because that cache would be CORPUS-sized (the payload columns),
     while the second evaluation's extra cost is one more pass of a narrow

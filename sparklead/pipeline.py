@@ -68,13 +68,6 @@ def enrich_stage(df: DataFrame, source_meta: DataFrame) -> DataFrame:
     )
 
 
-def seq_features(df: DataFrame) -> DataFrame:
-    return df.select(
-        "doc_id", "source", "label", "region", "template_id",
-        "n_tok", "n_distinct_tok", "first_tok", "last_tok", "n_tok_ok",
-    )
-
-
 def token_vectors(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Per-sequence event-count vector (north star: 'event-count vectors').
 
@@ -187,16 +180,14 @@ def source_agg(df: DataFrame) -> DataFrame:
 def run_pipeline(
     df: DataFrame,
     source_meta: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     resume: bool = True,
-    detector_sinks: bool = True,
 ) -> dict:
-    """Full parse -> enrich -> route -> aggregate. Returns sinks + metrics.
+    """Full parse -> enrich -> route -> aggregate. Returns manifests + metrics.
 
-    With ``out_dir`` the sinks are written with manifests (resumable);
-    without, the DataFrames are returned unevaluated for the caller.
-    ``detector_sinks`` adds the per-detector feature sinks (event-count
-    vectors + vocabulary) on top of the rollup sinks.
+    The sinks (event-count vectors, seq_features, template_counts,
+    source_agg, vocabulary) are written under ``out_dir`` with manifests, so
+    a re-run with ``resume`` skips the completed ones.
     """
     t0 = time.time()
     enriched = enrich_stage(parse_stage(df), source_meta)
@@ -204,57 +195,41 @@ def run_pipeline(
         "label", "region", "template_id", "n_tok", "n_distinct_tok",
         "first_tok", "last_tok", "n_tok_ok",
     )
-    out: dict = {"sinks": {}}
-    if out_dir is None:
-        out["sinks"] = {"seq_features": seq_features(enriched)} | {
-            "template_counts": template_counts(enriched),
-            "source_agg": source_agg(enriched),
-        }
-        if detector_sinks:
-            out["sinks"]["token_vectors"] = token_vectors(enriched)
-            out["sinks"]["vocabulary"] = vocabulary(enriched)
-    else:
-        # Staged materialization, ONE scan of the raw input (round-3 layout):
-        # token_vectors carries the seq_features scalars through (``keep``),
-        # so the single expensive pass (parse + enrich + per-token hashing +
-        # simhash) writes the combined sink, and EVERY other sink derives
-        # from routed tables — seq_features is a narrow projection (parquet
-        # column pruning skips the wide vocab/counts columns entirely),
-        # rollups read seq_features, the vocabulary reads the per-doc-
-        # distinct vectors. The round-2 layout scanned the raw input twice;
-        # at 100 TB one full parse of the token arrays is the dominant cost
-        # and this halves it.
-        import os
+    # Staged materialization, ONE scan of the raw input (round-3 layout):
+    # token_vectors carries the seq_features scalars through (``keep``),
+    # so the single expensive pass (parse + enrich + per-token hashing +
+    # simhash) writes the combined sink, and EVERY other sink derives
+    # from routed tables — seq_features is a narrow projection (parquet
+    # column pruning skips the wide vocab/counts columns entirely),
+    # rollups read seq_features, the vocabulary reads the per-doc-
+    # distinct vectors. The round-2 layout scanned the raw input twice;
+    # at 100 TB one full parse of the token arrays is the dominant cost
+    # and this halves it.
+    import os
 
-        spark = df.sparkSession
-        if detector_sinks:
-            m1 = routing.route(
-                {"token_vectors": lambda: token_vectors(enriched, keep=seq_cols)},
-                out_dir,
-                resume=resume,
-            )
-            tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
-            m1 |= routing.route(
-                {"seq_features": lambda: tv.select("doc_id", "source", *seq_cols)},
-                out_dir,
-                resume=resume,
-            )
-        else:
-            m1 = routing.route(
-                {"seq_features": lambda: seq_features(enriched)}, out_dir, resume=resume
-            )
-        feats = spark.read.parquet(os.path.join(out_dir, "seq_features"))
-        stage2 = {
-            "template_counts": lambda: template_counts(feats),
-            "source_agg": lambda: source_agg(feats),
-        }
-        if detector_sinks:
-            tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
-            stage2["vocabulary"] = lambda: vocabulary_from_vectors(tv)
-        m2 = routing.route(stage2, out_dir, resume=resume)
-        out["manifests"] = m1 | m2
-        out["rows"] = out["manifests"]["seq_features"]["rows"]
+    spark = df.sparkSession
+    m1 = routing.route(
+        {"token_vectors": lambda: token_vectors(enriched, keep=seq_cols)},
+        out_dir,
+        resume=resume,
+    )
+    tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
+    m1 |= routing.route(
+        {"seq_features": lambda: tv.select("doc_id", "source", *seq_cols)},
+        out_dir,
+        resume=resume,
+    )
+    feats = spark.read.parquet(os.path.join(out_dir, "seq_features"))
+    stage2 = {
+        "template_counts": lambda: template_counts(feats),
+        "source_agg": lambda: source_agg(feats),
+    }
+    tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
+    stage2["vocabulary"] = lambda: vocabulary_from_vectors(tv)
+    m2 = routing.route(stage2, out_dir, resume=resume)
+    out: dict = {"manifests": m1 | m2}
+    out["rows"] = out["manifests"]["seq_features"]["rows"]
     out["wall_s"] = round(time.time() - t0, 3)
-    if "rows" in out and out["wall_s"] > 0:
+    if out["wall_s"] > 0:
         out["seqs_per_sec"] = round(out["rows"] / out["wall_s"], 1)
     return out

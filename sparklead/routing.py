@@ -111,7 +111,6 @@ def route(
     sinks: dict[str, Callable[[], DataFrame]],
     out_dir: str,
     resume: bool = True,
-    concurrent: bool = True,
 ) -> dict[str, dict]:
     """Write every sink; with resume=True, completed sinks are skipped.
 
@@ -176,7 +175,7 @@ def route(
                 pending[name] = thunk
         else:
             pending[name] = thunk
-    if len(pending) <= 1 or not concurrent:
+    if len(pending) <= 1:
         for name, thunk in pending.items():
             results[name] = write_sink(thunk(), os.path.join(out_dir, name))
         return results

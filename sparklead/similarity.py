@@ -390,36 +390,36 @@ def _auto_fit_fraction(corpus: DataFrame, fit_sample: int) -> float | None:
 def _ivf_fit(vecs: DataFrame, n_centroids: int, seed: int, fit_sample: int, fit_fraction: float):
     """Fit the IVF coarse quantizer on a bounded cross-corpus draw
     (``sample(fit_fraction).limit(fit_sample)`` — see ivf_topk docstring),
-    falling back to the plain prefix when the sample is too small for
-    ``n_centroids``. The fallback WARNS with the original error: a silent
-    fallback on a transient failure would quietly reintroduce the
-    prefix-bias this fit exists to remove."""
+    falling back to the plain prefix when the draw is empty (a corpus
+    smaller than ~1/fit_fraction rows). The empty draw is detected with a
+    one-row probe BEFORE fitting: KMeans on zero rows launches a job that
+    aborts ("Nothing has been added to this summarizer"). The fallback
+    WARNS, and any genuine fit error propagates: a silent prefix refit would
+    quietly reintroduce the prefix-bias this fit exists to remove."""
     import warnings
 
     from pyspark.ml.clustering import KMeans
 
     km = KMeans(k=n_centroids, seed=seed, featuresCol="_v", predictionCol="cell")
     fit_vecs = vecs.select("_v").sample(fraction=fit_fraction, seed=seed).limit(fit_sample)
-    try:
+    if not fit_vecs.isEmpty():
         return km.fit(fit_vecs)
-    except Exception as e:
-        # EMPTY corpus (round-6 empty-input probe): KMeans cannot fit on
-        # zero rows and the prefix fallback would die identically — return
-        # None and let the caller produce an empty result. At scale an
-        # all-rows-filtered-away corpus is a normal pipeline state, not an
-        # error.
-        if vecs.select("_v").limit(1).isEmpty():
-            return None
-        warnings.warn(
-            f"_ivf_fit: sampled KMeans fit failed ({type(e).__name__}: {e}); "
-            f"falling back to the prefix fit — correct only when the corpus "
-            f"is smaller than ~n_centroids/fit_fraction rows (then the "
-            f"'prefix' is the whole corpus); on a large sorted corpus the "
-            f"fallback centroids are PREFIX-BIASED",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return km.fit(vecs.select("_v").limit(fit_sample))
+    # EMPTY corpus (round-6 empty-input probe): KMeans cannot fit on zero
+    # rows and the prefix fallback would die identically — return None and
+    # let the caller produce an empty result. At scale an all-rows-filtered-
+    # away corpus is a normal pipeline state, not an error.
+    if vecs.select("_v").limit(1).isEmpty():
+        return None
+    warnings.warn(
+        f"_ivf_fit: the sampled draw (fraction {fit_fraction}) is empty; "
+        f"falling back to the prefix fit — correct only when the corpus "
+        f"is smaller than ~n_centroids/fit_fraction rows (then the "
+        f"'prefix' is the whole corpus); on a large sorted corpus the "
+        f"fallback centroids are PREFIX-BIASED",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return km.fit(vecs.select("_v").limit(fit_sample))
 
 
 def ivf_topk(

@@ -56,6 +56,61 @@ PRETOK_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 SINK_NAMES = ("seq_features", "template_counts", "source_agg")
 
 
+def _committed_batches(manifest_path: str) -> dict:
+    """{batch_id: content identity} of every COMMITTED manifest entry."""
+    done: dict = {}
+    if os.path.exists(manifest_path):
+        with open(manifest_path) as f:
+            for line in f:
+                e = json.loads(line)
+                if e.get("committed"):
+                    done[e["batch_id"]] = e.get("identity")
+    return done
+
+
+def _batch_identity(batch_df: DataFrame) -> tuple[int, str]:
+    """(rows, identity) of a micro-batch in one aggregate job: identity =
+    rows + an order-invariant xxhash64 fold over the full row struct, so a
+    replayed batch matches its committed entry and a different batch under
+    the same id (lost checkpoint) does not."""
+    ident = batch_df.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.expr("bit_xor(xxhash64(struct(*)))"), F.lit(0).cast("long")).alias("fp"),
+    ).first()
+    return ident["rows"], f"{ident['rows']}:{ident['fp']}"
+
+
+def _reset_from(batch_id: int, batch_dirs: list[str], manifest_path: str) -> None:
+    """New-generation reset (round-4, advisor fix): a committed batch_id
+    whose CONTENT identity mismatches means the checkpoint was lost and the
+    restarted run is repacking the input into a NEW batch sequence — every
+    previously-committed ``batch_id=N`` dir with N >= the divergence point
+    (under each of ``batch_dirs``) belongs to the dead generation. Left in
+    place they double-count (readers union them) and the manifest keeps
+    conflicting committed entries. Remove those dirs and rewrite the
+    manifest keeping only pre-divergence entries (at divergence batch 0 —
+    the common lost-checkpoint case — this is a full wipe + fresh
+    manifest). Batches BEFORE the divergence point matched
+    content-identically and stay. Stale ids above the new run's max can
+    only survive if the input SHRANK between runs, which an append-only
+    source contract excludes."""
+    import re
+    import shutil
+
+    for parent in batch_dirs:
+        if not os.path.isdir(parent):
+            continue
+        for d in os.listdir(parent):
+            m = re.fullmatch(r"batch_id=(\d+)", d)
+            if m and int(m.group(1)) >= batch_id:
+                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    if os.path.exists(manifest_path):
+        with open(manifest_path) as f:
+            keep = [ln for ln in f if json.loads(ln).get("batch_id", 0) < batch_id]
+        with open(manifest_path, "w") as f:
+            f.writelines(keep)
+
+
 def stream_route(
     spark: SparkSession,
     input_dir: str,
@@ -81,47 +136,6 @@ def stream_route(
     enriched_stream = enrich_stage(parse_stage(stream), source_meta)
     manifest_path = os.path.join(out_dir, "stream_manifest.jsonl")
 
-    def _committed_batches() -> dict:
-        done: dict = {}
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                for line in f:
-                    e = json.loads(line)
-                    if e.get("committed"):
-                        done[e["batch_id"]] = e.get("identity")
-        return done
-
-    def _reset_from(batch_id: int) -> None:
-        """New-generation reset (round-4, advisor fix): a committed batch_id
-        whose CONTENT identity mismatches means the checkpoint was lost and
-        the restarted run is repacking the input into a NEW batch sequence —
-        every previously-committed batch dir with id >= the divergence point
-        belongs to the dead generation. Left in place they double-count
-        (the sink union reads them) and the manifest keeps conflicting
-        committed entries. Remove those dirs across ALL sinks and rewrite
-        the manifest keeping only pre-divergence entries (at divergence
-        batch 0 — the common lost-checkpoint case — this is a full wipe +
-        fresh manifest). Batches BEFORE the divergence point matched
-        content-identically and stay. Stale ids above the new run's max can
-        only survive if the input SHRANK between runs, which an append-only
-        source contract excludes."""
-        import re
-        import shutil
-
-        for name in SINK_NAMES:
-            sink_dir = os.path.join(out_dir, name)
-            if not os.path.isdir(sink_dir):
-                continue
-            for d in os.listdir(sink_dir):
-                m = re.fullmatch(r"batch_id=(\d+)", d)
-                if m and int(m.group(1)) >= batch_id:
-                    shutil.rmtree(os.path.join(sink_dir, d), ignore_errors=True)
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                keep = [ln for ln in f if json.loads(ln).get("batch_id", 0) < batch_id]
-            with open(manifest_path, "w") as f:
-                f.writelines(keep)
-
     def route_batch(batch_df: DataFrame, batch_id: int) -> None:
         # IDEMPOTENT per-batch write: after a mid-batch failure, checkpoint
         # recovery REPLAYS the batch — a plain mode('append') would land its
@@ -137,21 +151,16 @@ def stream_route(
         # (2) a replayed half-written batch OVERWRITES its own batch_id=N
         # subdirectory instead of appending.
         batch_df = batch_df.persist()
-        ident = batch_df.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(struct(*)))"), F.lit(0).cast("long")
-            ).alias("fp"),
-        ).first()
-        n_rows, identity = ident["rows"], f"{ident['rows']}:{ident['fp']}"
-        committed = _committed_batches()
+        n_rows, identity = _batch_identity(batch_df)
+        committed = _committed_batches(manifest_path)
         if batch_id in committed:
             if committed[batch_id] == identity:
                 batch_df.unpersist()
                 return
             # committed id, different content: lost-checkpoint regeneration —
             # clear the dead generation from this batch onward (see _reset_from)
-            _reset_from(batch_id)
+            sink_dirs = [os.path.join(out_dir, name) for name in SINK_NAMES]
+            _reset_from(batch_id, sink_dirs, manifest_path)
         entries = []
         for name, frame in {
             "seq_features": batch_df.select(
@@ -320,45 +329,19 @@ def stream_drain_templates(
 
     manifest_path = os.path.join(template_dir, "drain_manifest.jsonl")
 
-    def _committed() -> dict:
-        done: dict = {}
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                for line in f:
-                    e = json.loads(line)
-                    if e.get("committed"):
-                        done[e["batch_id"]] = e.get("identity")
-        return done
-
     def mine_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
-        ident = batch_df.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(struct(*)))"), F.lit(0).cast("long")
-            ).alias("fp"),
-        ).first()
-        identity = f"{ident['rows']}:{ident['fp']}"
-        committed = _committed()
+        n_rows, identity = _batch_identity(batch_df)
+        committed = _committed_batches(manifest_path)
         if batch_id in committed:
             if committed[batch_id] == identity:
                 batch_df.unpersist()
                 return
             # lost-checkpoint regeneration: drop the dead generation's
             # snapshots and manifest tail, then re-mine from the surviving
-            # prefix (mirrors stream_route._reset_from)
-            import re
-            import shutil
-
-            for d in os.listdir(template_dir):
-                m = re.fullmatch(r"batch_id=(\d+)", d)
-                if m and int(m.group(1)) >= batch_id:
-                    shutil.rmtree(os.path.join(template_dir, d), ignore_errors=True)
-            with open(manifest_path) as f:
-                keep = [ln for ln in f if json.loads(ln).get("batch_id", 0) < batch_id]
-            with open(manifest_path, "w") as f:
-                f.writelines(keep)
-            committed = _committed()
+            # prefix
+            _reset_from(batch_id, [template_dir], manifest_path)
+            committed = _committed_batches(manifest_path)
         prev = max(committed, default=None)
         if prev is None:
             miner = DrainMiner(sim_th, max_clusters)
@@ -373,7 +356,7 @@ def stream_drain_templates(
                 json.dumps(
                     {
                         "batch_id": batch_id,
-                        "rows": ident["rows"],
+                        "rows": n_rows,
                         "n_templates": len(miner.templates),
                         "committed": True,
                         "identity": identity,
@@ -404,11 +387,7 @@ def load_latest_drain_templates(
     """Load the newest COMMITTED snapshot written by stream_drain_templates."""
     from sparklead.mining.drain import DrainMiner
 
-    manifest_path = os.path.join(template_dir, "drain_manifest.jsonl")
-    committed = []
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            committed = [json.loads(l)["batch_id"] for l in f if json.loads(l).get("committed")]
+    committed = _committed_batches(os.path.join(template_dir, "drain_manifest.jsonl"))
     if not committed:
         raise FileNotFoundError(f"no committed drain snapshot under {template_dir}")
     return DrainMiner.load_templates(

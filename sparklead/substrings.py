@@ -30,7 +30,7 @@ Design for 100 TB:
   — no self-join, no second hash pass, nothing quadratic. The shuffle
   carries (gram, key, pos): ~20 bytes per corpus token on the fast
   lane. MEASURED against the groupBy+join alternative at 2M docs
-  (tools/substr_lane_ab.py): the window lane wins 1.65x on wall and
+  (BENCH.md round-8b "Detection-lane A/B"): the window lane wins 1.65x on wall and
   2.24x on shuffle with identical values — near-unique gram keys make
   the agg's hash table data-sized (it spills through sorted runs
   anyway) while paying a second corpus scan and a gram-keyed join

@@ -55,6 +55,44 @@ def test_iplom_bijection_splits_shared_length(spark):
     assert t == {"open <*> <*> <*> ok", "drop <*> <*> <*> ok"}
 
 
+def test_iplom_step2_support_skips_small_partitions(spark):
+    """``step2_support`` (the reference's step2Support, IPLoM.py:204-262): a
+    partition with at most that many rows is not split in S2. Both length
+    groups here would split on position 0 (the fewest distinct tokens, 2);
+    at support 4 only the 6-row group does, the 4-row group keeps its S1 key."""
+    from sparklead.mining.iplom import iplom_keyed
+
+    rows = [(["open", "h1", "s1"],), (["open", "h2", "s2"],), (["drop", "h3", "s3"],), (["drop", "h4", "s4"],)]
+    rows += [([f"v{i % 2}", f"h{i}", f"p{i % 3}", f"q{i}"],) for i in range(6)]
+    df = spark.createDataFrame(rows, "e_words array<string>")
+
+    def s2_split(support):
+        keyed = iplom_keyed(df, "e_words", step2_support=support).collect()
+        return {len(r["e_words"]): "|s2:" in r["part_key"] for r in keyed}
+
+    assert s2_split(0) == {3: True, 4: True}
+    assert s2_split(3) == {3: True, 4: True}
+    assert s2_split(4) == {3: False, 4: True}
+    assert s2_split(6) == {3: False, 4: False}
+
+
+def test_iplom_pst_marks_outliers(spark):
+    """``pst`` (partition support threshold, IPLoM.py:449-455): a partition
+    holding less than ``pst`` of all rows is flagged ``is_outlier``; without
+    ``pst`` the column is absent."""
+    from sparklead.mining.iplom import iplom_templates
+
+    rows = [(["disk", "full", f"n{i}"],) for i in range(30)] + [(["a", "b", "c", "d", "e"],)]
+    df = spark.createDataFrame(rows, "e_words array<string>")
+    t = iplom_templates(df, "e_words", pst=0.05)
+    assert t.columns == ["template_id", "template", "part_len", "is_outlier"]
+    got = {(r["template"], r["part_len"], r["is_outlier"]) for r in t.collect()}
+    assert got == {("disk full <*>", 30, False), ("a b c d e", 1, True)}
+    assert iplom_templates(df, "e_words").columns == ["template_id", "template", "part_len"]
+    # 1/31 is above a 0.03 threshold: nothing is an outlier
+    assert not any(r["is_outlier"] for r in iplom_templates(df, "e_words", pst=0.03).collect())
+
+
 # ------------------------------------------------------------------ tree merge
 
 def test_tree_merge_caps_driver_intake_and_is_invariant(tokenized):

@@ -138,11 +138,22 @@ def test_ivf_fit_sample_not_prefix_biased(spark):
 
 def test_ivf_fit_tiny_corpus_fallback(spark):
     """Corpora too small for the sample to yield n_centroids rows must fall
-    back to the prefix fit instead of dying."""
+    back to the prefix fit instead of dying. The empty draw is detected
+    before fitting, so the fallback launches no job that fails."""
     from sparklead.similarity import _ivf_fit, ivf_topk
 
     vecs = _two_cluster_vecs(spark, n_per=20)
-    model = _ivf_fit(vecs, n_centroids=8, seed=42, fit_sample=100, fit_fraction=0.01)
+    sc = spark.sparkContext
+    group = "ivf_fit_tiny_corpus_fallback"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.warns(RuntimeWarning, match="falling back to the prefix fit"):
+            model = _ivf_fit(vecs, n_centroids=8, seed=42, fit_sample=100, fit_fraction=0.01)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    assert jobs and not [j.jobId for j in jobs if j.status == "FAILED"]
     assert len(model.clusterCenters()) >= 1
     # end-to-end still returns neighbors on a tiny corpus
     corpus = vecs.select("neighbor_id", F.col("cv").alias("embedding")).withColumnRenamed(

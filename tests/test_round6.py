@@ -651,9 +651,9 @@ def test_ivf_topk_empty_corpus(spark):
 
 
 def test_pl_iplom_deep_rounds_truncation(spark, monkeypatch):
-    """Round-6: _split_round references its input twice (stats agg + refine
-    join), so the S2 loop's logical plan DOUBLES per round — 2^rounds
-    nodes, the documented driver-OOM shape at ~14 rounds. _keyed now does a
+    """Round-6: mining.keyed.split_round references its input twice (stats
+    agg + refine join), so the S2 loop's logical plan DOUBLES per round —
+    2^rounds nodes, the documented driver-OOM shape at ~14 rounds. _keyed now does a
     lineage-truncating parquet roundtrip every _TRUNCATE_EVERY rounds;
     this pins that the roundtrip is a semantic NO-OP: deep-round templates
     with truncation (rounds=9 -> truncations after rounds 4 and 8) equal

@@ -215,8 +215,8 @@ def minhash_candidates(
     (minhash_signature_fast over pre-hashed shingles) — the production path
     at corpus scale.
 
-    PARAMETER SIZING AT SCALE (round-8, measured — tools/lsh_candidate_sweep.py
-    + BENCH.md): expected FALSE candidates ≈ C(n,2)·b·s^r (b bands, r rows
+    PARAMETER SIZING AT SCALE (round-8, measured — BENCH.md "Round-8 LSH
+    candidate-volume sweep"): expected FALSE candidates ≈ C(n,2)·b·s^r (b bands, r rows
     per band, s = typical random-pair shingle Jaccard). This is a THRESHOLD
     effect, not a gradual one — on the seeded corpus (5k-word vocab,
     40-token docs) candidate volume is EXACTLY linear through 800k docs at

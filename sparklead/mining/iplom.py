@@ -7,13 +7,15 @@ one Python list per partition). Steps and their Spark shapes:
   S2 (:204-262)  ONE split on the position with the  -> keyed.split_round:
                  fewest (>1) distinct tokens            posexplode + groupBy
                  (partitions <= step2Support skip)      argmin + join
-  S3 (:264-459)  bijection split: pick positions      -> pair-relation stats are
-                 (p1,p2) by cardinality-frequency       two groupBy aggs; the
-                 (DetermineP1P2 :556-673), classify     (p1,p2) choice runs on
-                 each (t1,t2) token pair as 1-1 /       the collected per-part
-                 1-M / M-1 / M-M, split on the side     column-cardinality table
-                 chosen by Get_Rank_Posistion           (partition-count-sized,
-                 (:525-554)                             like a template table)
+  S3 (:264-459)  bijection split: pick positions      -> the (p1,p2) choice runs
+                 (p1,p2) by cardinality-frequency       on the collected per-part
+                 (DetermineP1P2 :556-673), classify     column-cardinality table
+                 each (t1,t2) token pair as 1-1 /       (partition-count-sized,
+                 1-M / M-1 / M-M, split on the side     like a template table);
+                 chosen by Get_Rank_Posistion           ONE distinct-pair groupBy
+                 (:525-554)                             + windows decide each
+                                                        pair's key, joined back
+                                                        to the rows once
   S4 (:461-502)  template: per position,              -> keyed.key_templates,
                  countDistinct==1 ? token : '<*>'       shared with PL-IPLoM
                                                         and Brain
@@ -33,7 +35,7 @@ template table itself, never data-sized.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparklead.mining.keyed import (
@@ -44,8 +46,14 @@ from sparklead.mining.keyed import (
     split_round,
 )
 
+# the reference IPLoMParser's defaults (IPLoM.py): the cluster goodness
+# threshold ``CT`` of DetermineP1P2 and the ``lowerBound`` of
+# Get_Rank_Posistion (its ``upperBound`` takes no part in the split)
+CT = 0.35
+LOWER_BOUND = 0.25
 
-def _determine_p1p2(card_rows: list, ct: float) -> dict[str, tuple[int, int]]:
+
+def _determine_p1p2(card_rows: list) -> dict[str, tuple[int, int]]:
     """Faithful port of DetermineP1P2 + Get_Mapping_Position
     (IPLoM.py:556-673) over the collected cardinality table. All rows of a
     partition share one token count, so its length is its position count;
@@ -63,7 +71,7 @@ def _determine_p1p2(card_rows: list, ct: float) -> dict[str, tuple[int, int]]:
         if n_len < 2:
             continue
         count_1 = sum(1 for d in cards.values() if d == 1)
-        if count_1 / n_len >= ct:  # cluster goodness: already mostly constant
+        if count_1 / n_len >= CT:  # cluster goodness: already mostly constant
             continue
         # frequency of each cardinality across columns — iterate positions in
         # SORTED order: card_rows arrive in collect() order (nondeterministic),
@@ -129,125 +137,97 @@ def _determine_p1p2(card_rows: list, ct: float) -> dict[str, tuple[int, int]]:
     return out
 
 
-def _step3(base: DataFrame, tokens_col: str, ct: float, lower: float, upper: float) -> DataFrame:
-    """Bijection split. Pair-relation cardinalities (m1 = |p2 partners of a
-    p1 token| etc.) come from two hash aggregations; the per-row split key is
-    the reference's 1-1 / 1-M / M-1 / M-M case analysis (IPLoM.py:362-440)
-    expressed as a when-chain."""
+def _step3(base: DataFrame, tokens_col: str) -> DataFrame:
+    """Bijection split. A row's new key depends only on its part and its
+    (p1, p2) token pair, so every S3 statistic comes from ONE distinct-pair
+    aggregate: windows over it give the pair-relation cardinalities (m1 =
+    |p2 partners of a p1 token|, n1 = its lines, and sym.) and the 1-1 / 1-M
+    / M-1 / M-M case analysis (IPLoM.py:362-440); one part-sized groupBy
+    gives the M-M leftover set sizes. The resulting pair-sized decision
+    table joins back to the rows once."""
     spark = base.sparkSession
-    p1p2 = _determine_p1p2(pos_cardinalities(base, "part_key", tokens_col).collect(), ct)
+    p1p2 = _determine_p1p2(pos_cardinalities(base, "part_key", tokens_col).collect())
     if not p1p2:
         return base
     pp_df = spark.createDataFrame(
         [(k, p1, p2) for k, (p1, p2) in p1p2.items()], "part_key string, p1 int, p2 int"
     )
-    with_pp = base.join(pp_df, "part_key", "left")
-    t1 = F.element_at(F.col(tokens_col), F.col("p1") + 1)
-    t2 = F.element_at(F.col(tokens_col), F.col("p2") + 1)
-    pairs = with_pp.filter(F.col("p1").isNotNull()).select(
-        "part_key", t1.alias("t1"), t2.alias("t2")
+    rows = base.join(pp_df, "part_key", "left").select(
+        "*",
+        F.element_at(F.col(tokens_col), F.col("p1") + 1).alias("_t1"),
+        F.element_at(F.col(tokens_col), F.col("p2") + 1).alias("_t2"),
     )
-    # m1/n1: partner cardinality + matching-line count per p1 token (and sym.)
-    rel1 = pairs.groupBy("part_key", "t1").agg(
-        F.countDistinct("t2").alias("m1"), F.count(F.lit(1)).alias("n1")
-    )
-    rel2 = pairs.groupBy("part_key", "t2").agg(
-        F.countDistinct("t1").alias("m2"), F.count(F.lit(1)).alias("n2")
-    )
-    dpairs = pairs.distinct().join(rel1, ["part_key", "t1"]).join(rel2, ["part_key", "t2"])
-    # per p1 token: do ALL partners map back uniquely? (IPLoM.py:308-321)
-    agg1 = dpairs.groupBy("part_key", "t1").agg(
-        F.max("m2").alias("maxm2"), F.max("m1").alias("m1"), F.max("n1").alias("n1")
-    ).select(
-        "part_key", "t1",
-        ((F.col("m1") == 1) & (F.col("maxm2") == 1)).alias("one_to_one"),
-        ((F.col("m1") > 1) & (F.col("maxm2") == 1)).alias("one_to_m1"),
-        (F.col("m1").cast("double") / F.col("n1")).alias("dist1"),
-    )
-    agg2 = dpairs.groupBy("part_key", "t2").agg(
-        F.max("m1").alias("maxm1"), F.max("m2").alias("m2"), F.max("n2").alias("n2")
-    ).select(
-        "part_key", "t2",
-        ((F.col("m2") > 1) & (F.col("maxm1") == 1)).alias("m_to_one"),
-        (F.col("m2").cast("double") / F.col("n2")).alias("dist2"),
+    by_t1 = Window.partitionBy("part_key", "_t1")
+    by_t2 = Window.partitionBy("part_key", "_t2")
+    t1, t2, m1, m2 = F.col("_t1"), F.col("_t2"), F.col("m1"), F.col("m2")
+    # a pair with a NULL token counts toward its other token's lines and
+    # partners, but is not an edge of the relation: the uniqueness and
+    # consumed-partner maxima range over pairs of two tokens only
+    edge = t1.isNotNull() & t2.isNotNull()
+    pairs = (
+        rows.filter(F.col("p1").isNotNull())
+        .groupBy("part_key", "_t1", "_t2")
+        .agg(F.count(F.lit(1)).alias("n"))
+        # m1/n1: partner cardinality + matching-line count per p1 token (and
+        # sym.); per token: do ALL partners map back uniquely? (IPLoM.py:
+        # 308-321). The windows alternate sides: each reads the last one's
+        # output
+        .withColumns({"m1": F.count(t2).over(by_t1), "n1": F.sum("n").over(by_t1)})
+        .withColumns({
+            "m2": F.count(t1).over(by_t2),
+            "n2": F.sum("n").over(by_t2),
+            "maxm1": F.max(F.when(edge, m1)).over(by_t2),
+        })
+        .withColumn("m_to_one", (m2 > 1) & (F.col("maxm1") == 1))
+        .withColumns({
+            "maxm2": F.max(F.when(edge, m2)).over(by_t1),
+            "t1_partner_m1": F.max(F.when(edge, F.col("m_to_one"))).over(by_t1),
+        })
+        .withColumns({
+            "one_to_one": (m1 == 1) & (F.col("maxm2") == 1),
+            "one_to_m": (m1 > 1) & (F.col("maxm2") == 1),
+        })
+        .withColumn("t2_partner_1m", F.max(F.when(edge, F.col("one_to_one") | F.col("one_to_m"))).over(by_t2))
     )
     # M-M leftover set sizes per part (IPLoM.py:427: |p1Set| < |p2Set|):
-    # tokens not consumed by 1-1 / 1-M / M-1 removals
-    mm1 = (
-        agg1.filter(~F.col("one_to_one") & ~F.col("one_to_m1"))
-        .join(
-            dpairs.join(agg2, ["part_key", "t2"]).groupBy("part_key", "t1").agg(F.max("m_to_one").alias("pm")),
-            ["part_key", "t1"],
-        )
-        .filter(~F.col("pm"))
-        .groupBy("part_key")
-        .agg(F.countDistinct("t1").alias("p1_left"))
-    )
-    mm2 = (
-        agg2.filter(~F.col("m_to_one"))
-        .join(
-            dpairs.join(agg1, ["part_key", "t1"]).groupBy("part_key", "t2").agg(
-                F.max("one_to_one").alias("p11"), F.max("one_to_m1").alias("p1m")
-            ),
-            ["part_key", "t2"],
-        )
-        .filter(~F.col("p11") & ~F.col("p1m"))
-        .groupBy("part_key")
-        .agg(F.countDistinct("t2").alias("p2_left"))
-    )
-    sets = mm1.join(mm2, "part_key", "full").na.fill(0, ["p1_left", "p2_left"])
-
-    keyed = (
-        with_pp.withColumn("_t1", t1)
-        .withColumn("_t2", t2)
-        .join(agg1.withColumnRenamed("t1", "_t1"), ["part_key", "_t1"], "left")
-        .join(agg2.withColumnRenamed("t2", "_t2"), ["part_key", "_t2"], "left")
-        .join(sets, "part_key", "left")
+    # tokens neither removed by 1-1 / 1-M / M-1 nor partnered with one that was
+    t1_left = ~F.col("one_to_one") & ~F.col("one_to_m") & ~F.col("t1_partner_m1")
+    t2_left = ~F.col("m_to_one") & ~F.col("t2_partner_1m")
+    sets = pairs.groupBy("part_key").agg(
+        F.countDistinct(F.when(t1_left, t1)).alias("p1_left"),
+        F.countDistinct(F.when(t2_left, t2)).alias("p2_left"),
     )
     # Get_Rank_Posistion (IPLoM.py:525-554): 1-M -> p1 side unless
-    # distance<=lower; M-1 -> p1 side only when distance<=lower
-    pick_t1_1m = F.col("dist1") > lower
-    pick_t1_m1 = F.col("dist2") <= lower
-    new_key = (
-        F.when(F.col("p1").isNull(), F.col("part_key"))
-        .when(F.col("one_to_one"), F.concat(F.col("part_key"), F.lit("|b:"), F.col("_t1")))
-        .when(
-            F.col("one_to_m1"),
-            F.concat(F.col("part_key"), F.lit("|b:"), F.when(pick_t1_1m, F.col("_t1")).otherwise(F.col("_t2"))),
-        )
-        .when(
-            F.col("m_to_one"),
-            F.concat(F.col("part_key"), F.lit("|b:"), F.when(pick_t1_m1, F.col("_t1")).otherwise(F.col("_t2"))),
-        )
-        # M-M: step-2 parts dump together (IPLoM.py:420-425); step-1 parts
-        # split on the smaller leftover side (:427-440)
-        .when(F.col("part_key").contains("|s"), F.concat(F.col("part_key"), F.lit("|b:mm")))
-        .otherwise(
-            F.concat(
-                F.col("part_key"),
-                F.lit("|b:"),
-                F.when(F.col("p1_left") < F.col("p2_left"), F.col("_t1")).otherwise(F.col("_t2")),
-            )
-        )
+    # distance<=lower; M-1 -> p1 side only when distance<=lower. M-M:
+    # step-2 parts dump together (IPLoM.py:420-425); step-1 parts split on
+    # the smaller leftover side (:427-440)
+    split_on = (
+        F.when(F.col("one_to_one"), t1)
+        .when(F.col("one_to_m"), F.when(m1.cast("double") / F.col("n1") > LOWER_BOUND, t1).otherwise(t2))
+        .when(F.col("m_to_one"), F.when(m2.cast("double") / F.col("n2") <= LOWER_BOUND, t1).otherwise(t2))
+        .when(F.col("part_key").contains("|s"), F.lit("mm"))
+        .otherwise(F.when(F.col("p1_left") < F.col("p2_left"), t1).otherwise(t2))
     )
-    return keyed.withColumn("part_key", new_key).drop(
-        "p1", "p2", "_t1", "_t2", "one_to_one", "one_to_m1", "t1_partners_m",
-        "m_to_one", "dist1", "dist2", "p1_left", "p2_left", "pm",
+    decided = pairs.join(sets, "part_key").select(
+        F.col("part_key").alias("_k"),
+        t1.alias("_d1"),
+        t2.alias("_d2"),
+        F.concat(F.col("part_key"), F.lit("|b:"), split_on).alias("_key"),
+    )
+    # NULL-safe on the tokens: a row with a NULL token takes its pair's key
+    on = [F.col("part_key") == F.col("_k"), t1.eqNullSafe(F.col("_d1")), t2.eqNullSafe(F.col("_d2"))]
+    return (
+        rows.join(decided, on, "left")
+        .withColumn("part_key", F.when(F.col("p1").isNull(), F.col("part_key")).otherwise(F.col("_key")))
+        .drop("p1", "p2", "_t1", "_t2", "_k", "_d1", "_d2", "_key")
     )
 
 
-def iplom_keyed(
-    df: DataFrame,
-    tokens_col: str = "e_words",
-    step2_support: int = 0,
-    ct: float = 0.35,
-    lower: float = 0.25,
-    upper: float = 0.9,
-) -> DataFrame:
+def iplom_keyed(df: DataFrame, tokens_col: str = "e_words", step2_support: int = 0) -> DataFrame:
     """S1 + S2 + S3: every row tagged with its final partition key."""
     base = df.withColumn("part_key", F.concat(F.lit("L"), F.size(tokens_col).cast("string")))
     base = split_round(base, tokens_col, "s2", step2_support)
-    return _step3(base, tokens_col, ct, lower, upper)
+    return _step3(base, tokens_col)
 
 
 def iplom_templates(

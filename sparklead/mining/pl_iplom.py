@@ -19,9 +19,9 @@ over partitions = iterative groupBy on derived keys"):
   * S3 (bijection, pl_iplom.py:318-440 in the reference) is available via
     ``bijection=True``: it chains the SAME relational bijection round the
     original-IPLoM port uses (mining/iplom.py:_step3 — no per-pair driver
-    loop; pair-relation stats are two hash aggs). Default off because
-    S1 + iterated S2 already yields the reference's cluster granularity on
-    machine logs and is what the golden tests pin.
+    loop; every pair-relation stat comes from one distinct-pair aggregate).
+    Default off because S1 + iterated S2 already yields the reference's
+    cluster granularity on machine logs and is what the golden tests pin.
 
 Everything is groupBy/join — the whole miner is ~4 shuffles per round,
 independent of partition count, and scales with data size not cluster count.
@@ -44,8 +44,6 @@ def _keyed(
     tokens_col: str,
     rounds: int,
     bijection: bool = False,
-    ct: float = 0.35,
-    lower: float = 0.25,
     scratch_dir: str | None = None,
 ) -> DataFrame:
     """Attach the final part_key to every row (S1 + ``rounds`` S2 rounds,
@@ -53,7 +51,8 @@ def _keyed(
 
     ``bijection=True`` chains the SAME relational bijection round the
     original-IPLoM implementation uses (mining/iplom.py:_step3 — pair-relation
-    stats from two hash aggs, 1-1/1-M/M-1/M-M case analysis as a when-chain;
+    stats from one distinct-pair aggregate and its windows, 1-1/1-M/M-1/M-M
+    case analysis as a pair-sized decision table joined back once;
     the reference PL-IPLoM runs S3 unconditionally, pl_iplom.py:318-440).
     Default off: the iterated-S2 granularity is this miner's documented
     contract and what the golden tests pin; turn it on for reference-exact
@@ -78,7 +77,7 @@ def _keyed(
     if bijection:
         from sparklead.mining.iplom import _step3
 
-        base = _step3(base, tokens_col, ct, lower, 0.9)
+        base = _step3(base, tokens_col)
     # scratch reclamation hook (round-7, advisor fix — see plan_utils):
     # the caller invokes it once nothing can recompute from the roundtrip
     # files; no-op when rounds <= _TRUNCATE_EVERY (no roundtrip fired)

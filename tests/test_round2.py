@@ -55,6 +55,45 @@ def test_iplom_bijection_splits_shared_length(spark):
     assert t == {"open <*> <*> <*> ok", "drop <*> <*> <*> ok"}
 
 
+def test_iplom_bijection_reaches_every_case(spark):
+    """Every arm of the S3 case analysis (IPLoM.py:362-440, Get_Rank_Posistion
+    :525-554, lowerBound 0.25), pinned as literal part keys. At
+    ``step2_support=30`` the 27-row length-2 and 6-row length-3 groups keep
+    their S1 keys, the 32-row length-4 group splits in S2 on its first token.
+
+    L2 (p1, p2 = 0, 1): ``a``-``A`` is 1-1; ``b`` is 1-M at distance 2/2 and
+    splits on itself, ``c`` is 1-M at 2/8 <= lower and splits on its partners;
+    ``D`` is M-1 at 2/8 and splits on its partners, ``E`` is M-1 at 2/2 and
+    splits on itself; ``f*``-``F*`` is M-M with 3 leftover p1 tokens against
+    2 leftover p2 tokens, so it splits on p2. L3 (p1, p2 = 2, 0): M-M with 2
+    leftover p1 tokens against 3, so it splits on p1. L4 (p1, p2 = 1, 2 in
+    each S2 part): M-M, so each S2 part keeps one ``|b:mm`` key. L5 has one
+    all-constant row (no S3 positions); the empty row is L0."""
+    from sparklead.mining.iplom import iplom_keyed
+
+    rows = [["a", "A"], ["b", "B1"], ["b", "B2"]]
+    rows += [["c", "C1"]] * 4 + [["c", "C2"]] * 4 + [["d1", "D"]] * 4 + [["d2", "D"]] * 4
+    rows += [["e1", "E"], ["e2", "E"]] + [[f, F_] for f in ("f1", "f2", "f3") for F_ in ("F1", "F2")]
+    rows += [[f"G{j}", f"h{j}", f"g{i}"] for i in (1, 2) for j in (1, 2, 3)]
+    rows += [[v, f"x{i % 2}{v}", f"y{i // 2 % 2}{v}", f"w{i % 3}"] for v in ("v1", "v2") for i in range(16)]
+    rows += [["k", "k", "k", "k", "k"], []]
+    df = spark.createDataFrame([(r,) for r in rows], "e_words array<string>")
+    got = {" ".join(r["e_words"]): r["part_key"] for r in iplom_keyed(df, "e_words", step2_support=30).collect()}
+    assert len(rows) == 27 + 6 + 32 + 2
+    assert got == {
+        "a A": "L2|b:a",
+        "b B1": "L2|b:b", "b B2": "L2|b:b",
+        "c C1": "L2|b:C1", "c C2": "L2|b:C2",
+        "d1 D": "L2|b:d1", "d2 D": "L2|b:d2",
+        "e1 E": "L2|b:E", "e2 E": "L2|b:E",
+        **{f"f{i} F{j}": f"L2|b:F{j}" for i in (1, 2, 3) for j in (1, 2)},
+        **{f"G{j} h{j} g{i}": f"L3|b:g{i}" for i in (1, 2) for j in (1, 2, 3)},
+        **{" ".join(r): f"L4|s2:{r[0]}|b:mm" for r in rows if len(r) == 4},
+        "k k k k k": "L5",
+        "": "L0",
+    }
+
+
 def test_iplom_step2_support_skips_small_partitions(spark):
     """``step2_support`` (the reference's step2Support, IPLoM.py:204-262): a
     partition with at most that many rows is not split in S2. Both length

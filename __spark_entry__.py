@@ -1620,8 +1620,9 @@ def _q_decontamination_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm per-doc bottleneck; the shingle slice/join allocation is). The
     fast lane's win is stream WIDTH, not CPU: ~8 bytes vs ~60-byte gram
     strings through the explode/shuffle — invisible at 20k docs, decisive
-    for shuffle volume at corpus scale (tools/decontam_scaleup.py records
-    it at 84.9k docs/s / 0.974x-linear shuffle at 2M docs)."""
+    for shuffle volume at corpus scale (BENCH.md "Round-7 decontamination
+    scale-up" records it at 84.9k docs/s / 0.974x-linear shuffle at 2M
+    docs; `tools/scaleup.py decontam` re-measures it)."""
     from sparklead.decontam import ngram_containment
 
     docs = _read(spark, sf_dir, "documents")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from sparklead.mining.keyed import (
     assign_by_key,
+    branch,
     flag_outliers,
     key_templates,
     pos_cardinalities,
@@ -212,7 +213,7 @@ def _step3(base: DataFrame, tokens_col: str) -> DataFrame:
         F.col("part_key").alias("_k"),
         t1.alias("_d1"),
         t2.alias("_d2"),
-        F.concat(F.col("part_key"), F.lit("|b:"), split_on).alias("_key"),
+        F.concat(F.col("part_key"), branch("b", split_on)).alias("_key"),
     )
     # NULL-safe on the tokens: a row with a NULL token takes its pair's key
     on = [F.col("part_key") == F.col("_k"), t1.eqNullSafe(F.col("_d1")), t2.eqNullSafe(F.col("_d2"))]

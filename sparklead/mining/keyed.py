@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -41,12 +41,20 @@ def pos_cardinalities(base: DataFrame, key: str, tokens_col: str) -> DataFrame:
     )
 
 
+def branch(tag: str, token: Column) -> Column:
+    """The key suffix of a split on ``token``: ``|<tag>:<token>``, or
+    ``|<tag>~null`` for a NULL token, which no real token can produce (a
+    bare ``concat`` would turn the whole key NULL and drop the row from
+    every partition)."""
+    return F.coalesce(F.concat(F.lit(f"|{tag}:"), token), F.lit(f"|{tag}~null"))
+
+
 def split_round(base: DataFrame, tokens_col: str, tag: str, min_size: int = 0) -> DataFrame:
     """One S2 round over ``part_key``: split each partition on the position
     with the fewest distinct tokens (ties: lowest position; IPLoM.py:226-237,
     pl_iplom.py:245-252) when that count is > 1 and the partition holds more
     than ``min_size`` rows (IPLoM's step2Support). A split partition's key
-    gains ``|<tag>:<token>``."""
+    gains ``branch(tag, token)``."""
     split_pos = (
         pos_cardinalities(base, "part_key", tokens_col)
         .groupBy("part_key")
@@ -64,11 +72,7 @@ def split_round(base: DataFrame, tokens_col: str, tag: str, min_size: int = 0) -
             "part_key",
             F.when(
                 F.col("split_pos").isNotNull(),
-                F.concat(
-                    F.col("part_key"),
-                    F.lit(f"|{tag}:"),
-                    F.element_at(F.col(tokens_col), F.col("split_pos") + 1),
-                ),
+                F.concat(F.col("part_key"), branch(tag, F.element_at(F.col(tokens_col), F.col("split_pos") + 1))),
             ).otherwise(F.col("part_key")),
         )
         .drop("split_pos")

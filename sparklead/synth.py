@@ -65,8 +65,8 @@ def seeded_dup_docs(spark: SparkSession, n_docs: int, partitions: int | None = N
     """Deterministic ~40-token docs over a 5k-word vocab with seeded
     duplicate structure: every 50th doc repeats doc id-1 verbatim (exact
     dup), every 70th repeats doc id-2 with its last token replaced (near
-    dup, shingle-Jaccard ~0.92). Promoted from tools/dedup_scaleup.py in
-    round 6 (judge item #4) so bench.py and the scale-up tool time the
+    dup, shingle-Jaccard ~0.92). Shared by bench.py and the ``dedup`` and
+    ``llm_pipeline`` workloads of tools/scaleup.py, so they time the
     dedup stack on the SAME corpus. Fully JVM-side, partition-invariant."""
     df = spark.range(0, n_docs, numPartitions=partitions or spark.sparkContext.defaultParallelism)
     base = (

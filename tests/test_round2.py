@@ -115,6 +115,23 @@ def test_iplom_step2_support_skips_small_partitions(spark):
     assert s2_split(6) == {3: False, 4: False}
 
 
+def test_iplom_null_split_token_keeps_its_row(spark):
+    """A NULL token at a split position gets its own branch, not a NULL key.
+    L3 splits in S2 on position 1, where ``u4`` holds NULL; L4 keeps its S1
+    key and splits in S3 with ``w2``'s p1 token NULL. Every row must keep a
+    non-NULL key, and the templates must cover all 7 rows."""
+    from sparklead.mining.iplom import iplom_keyed, iplom_templates
+
+    rows = [["u1", "a", "v1"], ["u2", "a", "v2"], ["u3", "b", "v3"], ["u4", None, "v4"]]
+    rows += [["w1", "c", "x1", "q"], ["w2", None, "x2", "q"], ["w3", "d", "x3", "q"]]
+    df = spark.createDataFrame([(r,) for r in rows], "e_words array<string>")
+    keys = {r["e_words"][0]: r["part_key"] for r in iplom_keyed(df, "e_words").collect()}
+    assert set(keys) == {r[0] for r in rows}
+    assert all(k is not None for k in keys.values()), keys
+    assert keys["u4"] == "L3|s2~null"
+    assert sum(r["part_len"] for r in iplom_templates(df, "e_words").collect()) == len(rows)
+
+
 def test_iplom_pst_marks_outliers(spark):
     """``pst`` (partition support threshold, IPLoM.py:449-455): a partition
     holding less than ``pst`` of all rows is flagged ``is_outlier``; without

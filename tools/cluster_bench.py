@@ -22,6 +22,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 import pyspark
 
+from scaleup import hardware_speedup  # same tools/ dir
+
 SPARK_BIN = os.path.join(os.path.dirname(pyspark.__file__), "bin")
 MASTER = "spark://127.0.0.1:7077"
 
@@ -147,10 +149,7 @@ def main() -> None:
         hi = results["4N"]
         eff = (hi["seqs_per_sec"] / lo["seqs_per_sec"]) / 4
         # hardware ceiling for the same 1 -> 4-process step (md5 calibration,
-        # same probe as tools/scaling_bench.py)
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from scaling_bench import hardware_speedup
-
+        # same probe as tools/scaleup.py)
         hw1 = hardware_speedup(EXEC_CORES)
         hw4 = hardware_speedup(4 * EXEC_CORES)
         hw_eff = (hw4 / hw1) / 4

@@ -751,7 +751,8 @@ def _q_token_count_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document event-count vector (the CountVectorizer featurization,
     anomaly_detection.py:261-270 / north star 'event-count vectors'):
     sorted distinct tokens + per-doc counts, via the O(L) sorted-run-length
-    trick (pipeline.token_vectors)."""
+    trick in HOFs over string tokens (pipeline.token_vectors computes the
+    same vectors for int tokens in one Arrow UDF)."""
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     staged = (
         docs.withColumn("_s", F.array_sort(F.split("text", " ")))

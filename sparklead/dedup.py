@@ -435,8 +435,9 @@ def simhash_signatures(
     map-side partial sums collapse the explode before any shuffle (the
     same rework that bought MinHash 19x, BENCH.md round-5 dedup table).
     Use this form at doc grain (dedup grouping); with_simhash remains for
-    narrow projections that must not shuffle (token_vectors keeps the whole
-    staged sink one scan). posexplode_outer + pos-null guards preserve
+    narrow projections that must not shuffle (``pipeline.token_vectors``
+    computes the same values for int tokens in its Arrow lane, pinned in
+    tests/test_round4.py). posexplode_outer + pos-null guards preserve
     empty-token docs as signature 0, exactly like with_simhash; the same
     <65,536-token slice cap keeps the 16-bit lanes carry-free.
 

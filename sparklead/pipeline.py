@@ -16,6 +16,9 @@ computed once and fanned out):
                mirroring the labels-CSV join (hdfs.py:24-29); token-derived
                features (first/last token, distinct-token count).
   route      — fan-out to per-detector feature sinks (routing.route):
+               * token_vectors: per-sequence sparse event-count vector +
+                 SimHash, one scalar Arrow UDF (numpy per Arrow batch) —
+                 the pipeline's only Python lane
                * seq_features: per-sequence numeric features
                * template_counts: per-template aggregate (count, hot templates)
                * source_agg: per-source rollup (SequenceEnhancer-style)
@@ -36,9 +39,13 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
 from sparklead import routing
 
@@ -68,56 +75,117 @@ def enrich_stage(df: DataFrame, source_meta: DataFrame) -> DataFrame:
     )
 
 
+def _vectors_udf():
+    """The token_vectors Arrow UDF. Its kernel is a local function, so
+    cloudpickle ships it by value: the Python worker imports neither
+    sparklead nor pandas, only numpy and pyarrow."""
+
+    def token_vectors_batch(tokens: pa.Array) -> pa.Array:
+        """One Arrow batch of ``tokens array<int>`` -> ``struct<vocab, counts,
+        simhash>``, in numpy over the flat value buffer and its offsets.
+
+        - vocab/counts: one sort of (doc, token) keys, run starts, run lengths.
+          A NULL token is its own run, sorted last (``array_sort``'s order); a
+          NULL array has empty vocab/counts.
+        - simhash: ``dedup.with_simhash``'s values. Spark's xxhash64 of each
+          int token (XXH64 ``hashInt``, seed 42; a NULL token hashes to the
+          seed), then the 16 lane-packed sums ``(h >> k) & 0x0001000100010001``
+          as prefix-sum differences over each doc's first 65,535 tokens (the
+          16-bit lanes stay carry-free; differences of wrapped 64-bit prefix
+          sums are exact), and bit b is set iff 2 * count(b) > n. A NULL array
+          signs 0.
+        """
+        u64 = np.uint64
+        n_docs = len(tokens)
+        lens = pc.list_value_length(tokens).fill_null(0).to_numpy().astype(np.int64)
+        off = np.zeros(n_docs + 1, np.int64)
+        np.cumsum(lens, out=off[1:])
+        flat = pc.list_flatten(tokens)
+        null = flat.is_null().to_numpy(zero_copy_only=False)
+        vals = flat.fill_null(0).to_numpy()
+        doc = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
+
+        # sparse counts: key = doc << 33 | (token + 2^31), a NULL token 2^32
+        key = (doc << 33) + np.where(null, 1 << 32, vals.astype(np.int64) + (1 << 31))
+        key.sort()
+        starts = np.flatnonzero(np.diff(key, prepend=-1))
+        counts = np.diff(np.append(starts, len(key))).astype(np.int32)
+        low = key[starts] & ((1 << 33) - 1)
+        run_off = np.zeros(n_docs + 1, np.int32)
+        np.cumsum(np.bincount(key[starts] >> 33, minlength=n_docs), out=run_off[1:])
+        vocab = pa.array((low - (1 << 31)).astype(np.int32), mask=low == 1 << 32)
+
+        # simhash: Spark's XxHash64Function.hashInt(t, 42)
+        p1, p2, p3 = u64(0x9E3779B185EBCA87), u64(0xC2B2AE3D27D4EB4F), u64(0x165667B19E3779F9)
+        h = u64((42 + 0x27D4EB2F165667C5 + 4) % (1 << 64)) ^ (vals.view(np.uint32).astype(u64) * p1)
+        h = ((h << u64(23)) | (h >> u64(41))) * p2 + p3
+        h ^= h >> u64(33)
+        h *= p2
+        h ^= h >> u64(29)
+        h *= p3
+        h ^= h >> u64(32)
+        h[null] = 42
+        n = np.minimum(lens, 65_535)
+        sig = np.zeros(n_docs, u64)
+        csum = np.zeros(len(h) + 1, u64)
+        for k in range(16):
+            np.cumsum((h >> u64(k)) & u64(0x0001000100010001), out=csum[1:])
+            pack = csum[off[:-1] + n] - csum[off[:-1]]
+            for lane in range(4):
+                cnt = ((pack >> u64(16 * lane)) & u64(0xFFFF)).astype(np.int64)
+                sig |= np.where(2 * cnt > n, u64(1 << (k + 16 * lane)), u64(0))
+
+        return pa.StructArray.from_arrays(
+            [
+                pa.ListArray.from_arrays(pa.array(run_off), vocab),
+                pa.ListArray.from_arrays(pa.array(run_off), pa.array(counts)),
+                pa.array(sig.view(np.int64)),
+            ],
+            names=["vocab", "counts", "simhash"],
+        )
+
+    # a StructType object, not a DDL string: the Python worker cannot parse
+    # DDL without a session
+    result = StructType([
+        StructField("vocab", ArrayType(IntegerType())),
+        StructField("counts", ArrayType(IntegerType())),
+        StructField("simhash", LongType()),
+    ])
+    return F.arrow_udf(token_vectors_batch, result)
+
+
 def token_vectors(df: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """Per-sequence event-count vector (north star: 'event-count vectors').
 
     Sparse form: sorted distinct tokens + their per-doc counts, plus the
-    64-bit SimHash dedup signature. Pure HOFs — CPU-heavy per row (O(L*D)
-    count fold + O(64L) simhash) but zero shuffle; this is the sink a
-    CountVectorizer-based detector consumes.
+    64-bit SimHash dedup signature (``dedup.with_simhash``'s values). One
+    scalar Arrow UDF (``_vectors_udf``) computes all three per Arrow
+    batch, zero shuffle; this is the sink a CountVectorizer-based detector
+    consumes. The HOF form it replaced ran ~18 interpreted lambda calls
+    per token (Spark generates no code inside HOF lambdas) and took 1.5x
+    (10k docs) to 5x (100k docs) as long, warm, on 4 cores (BENCH.md
+    "token_vectors Arrow lane").
+
+    ``tokens`` must be ``array<int>`` (the BASELINE input contract); any
+    other element type raises ``TypeError`` here, at plan build.
 
     ``keep`` carries extra (scalar) input columns through — the staged
     pipeline passes the seq_features scalars so ONE scan of the raw input
     produces the combined sink and every other sink derives from it
     (parquet column pruning makes the narrow re-reads nearly free).
     """
-    from sparklead.dedup import with_simhash
-
-    # O(L) sparse counting: sort once, find run starts, run lengths = counts.
-    # CRITICAL: the sorted array and run starts are materialized as columns —
-    # Catalyst does NOT common-subexpression-eliminate inside HOF lambdas, so
-    # referencing array_sort(tokens) from a lambda re-sorts per element
-    # (measured 100x slowdown). SimHash goes through with_simhash (hash-once
-    # column + 64 shift-add folds — 4x the per-token when-array fold).
-    # EMPTY-TOKENS GUARD (round-4 review fix, confirmed live): for an empty
-    # array, F.sequence(1, 0) auto-steps DOWN to [1, 0] and the filter
-    # lambda then evaluates element_at(_s, 0) -> INVALID_INDEX_OF_ZERO,
-    # killing the whole staged pipeline on a single empty pre-tokenized
-    # sequence. Empty docs short-circuit to empty vocab/counts (simhash 0).
-    # The run expressions are SQL strings for the same reason as the SimHash
-    # folds (see dedup._majority_vote_sql): each Column operator is a py4j
-    # round-trip, and this builder runs once per staged job.
-    empty_ints = "CAST(array() AS ARRAY<INT>)"
-    starts = (
-        f"CASE WHEN size(_s) = 0 THEN {empty_ints} ELSE filter("
-        "sequence(1, greatest(size(_s), 1)), "
-        "i -> (i = 1) OR (element_at(_s, i) != element_at(_s, i - 1))) END"
-    )
-    staged = with_simhash(
-        df.withColumn("_s", F.array_sort("tokens")).withColumn("_starts", F.expr(starts)),
-        "tokens",
-    )
-    next_starts = (
-        f"CASE WHEN size(_starts) = 0 THEN {empty_ints} ELSE "
-        f"concat(slice(_starts, 2, {1 << 30}), array(size(_s) + 1)) END"
-    )
-    return staged.select(
+    dtype = df.schema["tokens"].dataType
+    if not (isinstance(dtype, ArrayType) and isinstance(dtype.elementType, IntegerType)):
+        raise TypeError(f"token_vectors needs tokens array<int>, got {dtype.simpleString()}")
+    # the coalesces never fire (the UDF returns no NULLs); they keep the
+    # sink's columns non-nullable, as parquet `required`
+    return df.select("doc_id", "source", *keep, _vectors_udf()("tokens").alias("_tv")).select(
         "doc_id",
         "source",
         *keep,
-        F.expr("transform(_starts, i -> element_at(_s, i)) AS vocab"),
-        F.expr(f"zip_with({next_starts}, _starts, (b, a) -> b - a) AS counts"),
-        "simhash",
+        F.expr("coalesce(_tv.vocab, CAST(array() AS ARRAY<INT>)) AS vocab"),
+        F.expr("coalesce(_tv.counts, CAST(array() AS ARRAY<INT>)) AS counts"),
+        F.expr("coalesce(_tv.simhash, 0L) AS simhash"),
     )
 
 
@@ -208,24 +276,19 @@ def run_pipeline(
     import os
 
     spark = df.sparkSession
-    m1 = routing.route(
-        {"token_vectors": lambda: token_vectors(enriched, keep=seq_cols)},
-        out_dir,
-        resume=resume,
-    )
-    tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
-    m1 |= routing.route(
-        {"seq_features": lambda: tv.select("doc_id", "source", *seq_cols)},
-        out_dir,
-        resume=resume,
-    )
-    feats = spark.read.parquet(os.path.join(out_dir, "seq_features"))
+    # The read-backs pass the written frame's schema, so Spark launches no
+    # footer-schema job per read; the token_vectors read is built once.
+    vectors = token_vectors(enriched, keep=seq_cols)
+    m1 = routing.route({"token_vectors": lambda: vectors}, out_dir, resume=resume)
+    tv = spark.read.schema(vectors.schema).parquet(os.path.join(out_dir, "token_vectors"))
+    features = tv.select("doc_id", "source", *seq_cols)
+    m1 |= routing.route({"seq_features": lambda: features}, out_dir, resume=resume)
+    feats = spark.read.schema(features.schema).parquet(os.path.join(out_dir, "seq_features"))
     stage2 = {
         "template_counts": lambda: template_counts(feats),
         "source_agg": lambda: source_agg(feats),
+        "vocabulary": lambda: vocabulary_from_vectors(tv),
     }
-    tv = spark.read.parquet(os.path.join(out_dir, "token_vectors"))
-    stage2["vocabulary"] = lambda: vocabulary_from_vectors(tv)
     m2 = routing.route(stage2, out_dir, resume=resume)
     out: dict = {"manifests": m1 | m2}
     out["rows"] = out["manifests"]["seq_features"]["rows"]

@@ -28,7 +28,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_sparklead_manifest.json"
 
@@ -135,7 +135,9 @@ def route(
     Independent sinks are written from CONCURRENT driver threads (the
     standard Spark multi-job pattern): the scheduler interleaves their
     stages, so one sink's driver-side tail (commit, manifest) overlaps
-    another's compute instead of serializing 5 job boundaries.
+    another's compute instead of serializing 5 job boundaries. The threads
+    inherit the caller's job group, so ``cancelJobGroup`` and per-group
+    accounting reach every sink's jobs.
     """
     results: dict[str, dict] = {}
     pending: dict[str, Callable[[], DataFrame]] = {}
@@ -181,9 +183,20 @@ def route(
         return results
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # Each target runs with a copy of the calling thread's Spark local
+    # properties (job group, description, scheduler pool) and session tags.
+    # One copy per target: a thread that sets its own job group must not
+    # change its siblings'.
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(pending)) as pool:
         futures = {
-            name: pool.submit(lambda t=thunk, n=name: write_sink(t(), os.path.join(out_dir, n)))
+            name: pool.submit(
+                inheritable_thread_target(spark)(
+                    lambda t=thunk, n=name: write_sink(t(), os.path.join(out_dir, n))
+                )
+            )
             for name, thunk in pending.items()
         }
         for name, fut in futures.items():

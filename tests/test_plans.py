@@ -181,6 +181,20 @@ def test_iplom_bijection_plan_is_bounded(spark):
     assert aggregates <= 50, aggregates
 
 
+def test_token_vectors_one_arrow_udf_no_shuffle(spark):
+    """token_vectors runs one scalar Arrow UDF over the tokens and splits
+    its struct: one ArrowEvalPython node evaluating ONE UDF (not one per
+    field), and no shuffle; only the source lookup's broadcast."""
+    from sparklead.pipeline import token_vectors
+
+    enr = enrich_stage(parse_stage(synth.pretokenized(spark, 100)), synth.source_meta(spark))
+    p = _physical(token_vectors(enr, keep=("label", "n_tok")))
+    assert p.count("ArrowEvalPython") == 1
+    assert "pythonUDF0" in p and "pythonUDF1" not in p
+    assert "BroadcastExchange" in p
+    assert len(re.findall(r"(?<!Broadcast)Exchange", p)) == 0
+
+
 # Plan-construction cost: every Column/DataFrame call is one or more py4j
 # round-trips (0.1-0.25 ms each), so a builder that unrolls a wide
 # expression call by call pays for it on the driver before any executor

@@ -491,6 +491,44 @@ def test_salted_distinct_count_exact(spark):
     assert got == want
 
 
+def test_route_sink_jobs_keep_callers_job_group(spark, tmp_path):
+    """Concurrent sink writes run in the caller's job group: pool threads
+    inherit the calling thread's Spark local properties, so a caller's
+    cancelJobGroup or per-group accounting sees every sink's jobs. Each
+    thread gets its own copy: a sink thread that sets its own group (as a
+    per-sink tracing span does) leaves its siblings' groups alone."""
+    import uuid
+
+    from sparklead import routing
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"route-{uuid.uuid4().hex}"
+
+    def own_group(n):
+        sc.setJobGroup(f"{group}-{n}", f"sink {n}")
+        return spark.range(n)
+
+    sc.setJobGroup(group, "two-sink route")
+    try:
+        out = routing.route(
+            {"a": lambda: spark.range(10), "b": lambda: spark.range(20)}, str(tmp_path / "two")
+        )
+        caller_jobs = len(tracker.getJobIdsForGroup(group))
+        out3 = routing.route(
+            {"c": lambda: own_group(3), "d": lambda: own_group(4), "e": lambda: spark.range(5)},
+            str(tmp_path / "three"),
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert {k: m["rows"] for k, m in out.items()} == {"a": 10, "b": 20}
+    assert {k: m["rows"] for k, m in out3.items()} == {"c": 3, "d": 4, "e": 5}
+    # one write job per sink, each in the caller's group
+    assert caller_jobs >= 2
+    assert len(tracker.getJobIdsForGroup(group)) > caller_jobs  # sink e
+    assert tracker.getJobIdsForGroup(f"{group}-3") and tracker.getJobIdsForGroup(f"{group}-4")
+
+
 def test_route_resume_trust_escapes(spark, tmp_path):
     """Two deliberate trust-the-manifest escapes: (a) a manifest with no
     recorded schema (foreign writer) resumes as-is; (b) a thunk whose plan
@@ -541,6 +579,99 @@ def test_token_vectors_empty_tokens(spark):
     assert rows["d1"]["vocab"] == [] and rows["d1"]["counts"] == []
     assert rows["d1"]["simhash"] == 0
     assert rows["d0"]["vocab"] == [1, 3] and rows["d0"]["counts"] == [1, 2]
+
+
+def test_token_vectors_null_tokens(spark):
+    """A NULL token is its own run, sorted last (array_sort's order), with
+    its exact count; a NULL token array has an empty vector. SimHash keeps
+    with_simhash's values: a NULL token hashes to the seed (42) and counts
+    toward n, and a NULL array signs 0. Both vocabulary paths agree."""
+    from sparklead.dedup import with_simhash
+    from sparklead.pipeline import token_vectors, vocabulary, vocabulary_from_vectors
+
+    df = spark.createDataFrame(
+        [
+            ("d0", [3, None, 1, 3], 4, "s"),
+            ("d1", None, 0, "s"),
+            ("d2", [None, 7, None], 3, "s"),
+            ("d3", [None], 1, "s"),
+            ("d4", [5, 5], 2, "s"),
+        ],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    rows = {r["doc_id"]: r for r in token_vectors(df).collect()}
+    got = {d: (r["vocab"], r["counts"]) for d, r in rows.items()}
+    assert got == {
+        "d0": ([1, 3, None], [1, 2, 1]),
+        "d1": ([], []),
+        "d2": ([7, None], [1, 2]),
+        "d3": ([None], [1]),
+        "d4": ([5], [2]),
+    }
+    want = {r["doc_id"]: r["simhash"] for r in with_simhash(df, "tokens").collect()}
+    assert {d: r["simhash"] for d, r in rows.items()} == want
+    assert want["d1"] == 0 and want["d3"] == 42
+
+    def vocab_rows(v):
+        return sorted(((r["token"] is None, r["token"]), r["freq"], r["n_docs"]) for r in v.collect())
+
+    assert vocab_rows(vocabulary(df)) == vocab_rows(vocabulary_from_vectors(token_vectors(df)))
+
+
+def test_token_vectors_int_edges_match_with_simhash(spark):
+    """token_vectors' SimHash equals with_simhash on int tokens: INT_MIN,
+    INT_MAX, negatives, a NULL token and docs past the 65,535-token cap.
+    vocab/counts span every token of a long doc; the signature covers its
+    first 65,535 only, so two docs that differ only after the cap sign
+    alike."""
+    from sparklead.dedup import with_simhash
+    from sparklead.pipeline import token_vectors
+
+    lo, hi = -(2**31), 2**31 - 1
+    long_doc = [t * 7919 - 2**30 for t in range(70_000)]
+    other_tail = long_doc[:65_535] + [hi - t for t in range(1_000)]
+    docs = [
+        ("edges", [lo, hi, -1, 0, 1, lo, -7, hi]),
+        ("null_tok", [lo, None, hi, None]),
+        ("one", [-123456789]),
+        ("long", long_doc),
+        ("other_tail", other_tail),
+    ]
+    df = spark.createDataFrame(
+        [(d, t, len(t), "s") for d, t in docs],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    tv = token_vectors(df)
+    for name in ("vocab", "counts", "simhash"):
+        assert not tv.schema[name].nullable, name
+    got = {r["doc_id"]: r for r in tv.collect()}
+    # with_simhash's signed 64-bit fold overflows under ANSI once a top
+    # lane counts past 32,767; its wrapped sum is the intended value
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = {r["doc_id"]: r["simhash"] for r in with_simhash(df, "tokens").collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert {d: r["simhash"] for d, r in got.items()} == want
+    assert got["long"]["simhash"] == got["other_tail"]["simhash"]
+    assert got["long"]["vocab"] == sorted(long_doc) and got["long"]["counts"] == [1] * 70_000
+    assert len(got["other_tail"]["vocab"]) == 66_535
+    assert got["edges"]["vocab"] == [lo, -7, -1, 0, 1, hi]
+    assert got["edges"]["counts"] == [2, 1, 1, 1, 1, 2]
+    assert got["null_tok"]["vocab"] == [lo, hi, None]
+    assert got["null_tok"]["counts"] == [1, 1, 2]
+
+
+@pytest.mark.parametrize("tokens_type", ["array<string>", "array<bigint>", "string"])
+def test_token_vectors_rejects_non_int_tokens(spark, tokens_type):
+    """The sink's input contract is tokens array<int>; anything else fails
+    at plan build, before a job runs."""
+    from sparklead.pipeline import token_vectors
+
+    df = spark.createDataFrame([], f"doc_id string, tokens {tokens_type}, source string")
+    with pytest.raises(TypeError, match="array<int>"):
+        token_vectors(df)
 
 
 def test_lines_len_crlf_not_double_counted(spark):

@@ -207,9 +207,9 @@ def run_one(workload: str, n: int, cores: int, path: str) -> dict:
     try:
         frames = {name: spark.read.parquet(os.path.join(path, name)) for name in sorted(os.listdir(path))}
         tracer = Tracer(spark, cores)
-        # route writes sinks from pool threads, which do not inherit the
-        # caller's job group: a span per sink write, opened in its own
-        # thread, counts those jobs (nested under the open span)
+        # route writes sinks from pool threads that inherit the caller's
+        # job group; a span per sink write, opened in its own thread,
+        # splits those jobs out per sink (nested under the open span)
         tracer.patch(routing, "write_sink", lambda df, dest, *a, **kw: "routing.write_sink." + os.path.basename(dest))
         try:
             checks = WORKLOADS[workload][1](spark, tracer.span, frames, n, out)

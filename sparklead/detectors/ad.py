@@ -16,7 +16,11 @@ Spark-native re-expression of the reference's AnomalyDetector
     relationally, AUC via BinaryClassificationEvaluator.
 
 The feature matrix is per-SEQUENCE (thousands of rows, not billions), so
-model fitting is never the scale bottleneck; featurization is.
+the fit's cost at small sizes is its job count, not its compute: an
+iterative estimator runs one Spark job per pass, and each job's scheduling
+outweighs its executor time. ``train`` therefore fits on a coalesced view
+of its cached train frame sized by bytes (``_fit_view``); the cache build
+and the vocabulary fit stay at full parallelism.
 """
 
 from __future__ import annotations
@@ -203,6 +207,43 @@ _SPARK_MODELS = {
 _SKLEARN_MODELS = {"IF", "LOF", "OCSVM"}
 
 
+def _fit_view(cached: DataFrame) -> DataFrame:
+    """``cached.coalesce(n)`` with n = clamp(ceil(cached bytes /
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``), 1,
+    cached partitions): the count AQE's parallelism-first coalescing would
+    pick for a shuffle of that size.
+
+    A cached plan keeps its shuffle-partition count, and an iterative
+    estimator launches one job per pass over it (LR: a Summarizer job and
+    one treeAggregate per L-BFGS iteration). On the sequence matrix (about
+    200 rows, 95 KB in perfbench ``log_anomaly``) each such job ran a
+    4-task partial stage and a 1-task final stage for 2-13 ms of executor
+    time; at n = 1 treeAggregate skips the final stage, so each pass is
+    one 1-task stage (``detectors.ad.train`` 156 -> 48 tasks, 3.0 -> 2.1 s).
+
+    The view must not be the cache's first reader, or the whole upstream
+    lineage (the ``groupBy(seq_id)`` reduce side included) runs in n
+    tasks: an unbuilt cache is built first by a job at its own
+    parallelism. The size and partition count come from the built
+    ``InMemoryRelation`` and launch no job."""
+    spark = cached.sparkSession
+    rel = (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(cached._jdf).get().cachedRepresentation()
+    )
+    builder = rel.cacheBuilder()
+    if not builder.isCachedColumnBuffersLoaded():
+        # one job over the cache's own RDD; a DataFrame count() would add
+        # an aggregate's shuffle-map and final jobs
+        builder.cachedColumnBuffers().count()
+    size = rel.computeStats().sizeInBytes()
+    parts = builder.cachedColumnBuffers().getNumPartitions()
+    min_size = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
+    )
+    return cached.coalesce(max(1, min(-(-size // min_size), parts)))
+
+
 class AnomalyDetector:
     """train_* / predict / evaluate, mirroring the reference's surface."""
 
@@ -226,11 +267,14 @@ class AnomalyDetector:
         # call and released before it returns. Over a frame the caller
         # cached, the projection reads the caller's cache, and unpersisting
         # the projection leaves the caller's entry cached.
+        # The cache is built at full parallelism (by the vocabulary fit, or
+        # else by _fit_view); the transform and the estimator read its
+        # size-ruled coalesced view.
         f = self.featurizer
         cols = [f.item_col] if f.item_col else []
         train_df = train_df.select(*dict.fromkeys([*cols, *f.numeric_cols, f.label_col])).persist()
         try:
-            feats = f.fit(train_df).transform(train_df)
+            feats = f.fit(train_df).transform(_fit_view(train_df))
             if model in _SPARK_MODELS:
                 import importlib
 

@@ -69,8 +69,9 @@ def enrich_stage(df: DataFrame, source_meta: DataFrame) -> DataFrame:
     """Broadcast-lookup enrichment + token features. Still narrow (broadcast join)."""
     return (
         df.join(broadcast(source_meta), "source", "left")
-        .withColumn("first_tok", F.element_at("tokens", 1))
-        .withColumn("last_tok", F.element_at("tokens", -1))
+        # try_: an empty token array yields NULL ends instead of an ANSI error
+        .withColumn("first_tok", F.try_element_at("tokens", F.lit(1)))
+        .withColumn("last_tok", F.try_element_at("tokens", F.lit(-1)))
         .withColumn("n_distinct_tok", F.size(F.array_distinct("tokens")))
     )
 

@@ -17,6 +17,21 @@ def test_invariants(spark):
     assert enriched.count() == 3000  # row conservation through enrichment
 
 
+def test_empty_token_doc_routes(spark, tmp_path):
+    """An empty pre-tokenized doc has NULL first and last tokens; under ANSI
+    a plain element_at on it aborted the whole pipeline."""
+    df = spark.createDataFrame(
+        [("d0", [3, 1, 4], 3, "s"), ("d1", [], 0, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    meta = synth.source_meta(spark)
+    rows = {r["doc_id"]: r for r in enrich_stage(parse_stage(df), meta).collect()}
+    assert (rows["d0"]["first_tok"], rows["d0"]["last_tok"]) == (3, 4)
+    assert (rows["d1"]["first_tok"], rows["d1"]["last_tok"]) == (None, None)
+    r = run_pipeline(df, meta, out_dir=str(tmp_path / "sinks"))
+    assert r["manifests"]["seq_features"]["rows"] == 2
+
+
 def test_sink_aggregate_counts_consistent(spark):
     pt = synth.pretokenized(spark, 3000)
     enriched = enrich_stage(parse_stage(pt), synth.source_meta(spark))

@@ -1,5 +1,6 @@
 """PL-IPLoM miner, AD framework, and Structured Streaming tests."""
 
+import itertools
 import json
 import os
 
@@ -7,7 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparklead import synth
-from sparklead.detectors.ad import AnomalyDetector, SeqFeaturizer, evaluate, train_test_split
+from sparklead.detectors.ad import (
+    _SPARK_MODELS,
+    AnomalyDetector,
+    SeqFeaturizer,
+    _fit_view,
+    evaluate,
+    train_test_split,
+)
 from sparklead.enhancers import eventlog as E
 from sparklead.enhancers.sequence import aggregate_sequences
 from sparklead.mining.drain import parse_drain
@@ -174,6 +182,121 @@ def test_train_keeps_a_caller_persisted_frame(spark):
         assert seq.is_cached and seq.storageLevel != StorageLevel.NONE
     finally:
         seq.unpersist()
+
+
+@pytest.mark.parametrize("model", sorted(_SPARK_MODELS))
+def test_model_zoo_trains_and_predicts(labeled_seq, model):
+    """Every Spark model trains through ``AnomalyDetector`` and predicts one
+    0/1 row per test sequence; the supervised ones find the anomaly."""
+    tr, te = train_test_split(labeled_seq, 0.5)
+    det = AnomalyDetector(SeqFeaturizer(item_col="events", numeric_cols=("seq_len",)))
+    out = det.train(tr, model).predict(te)
+    rows = out.select("seq_id", "pred_ano").collect()
+    assert len(rows) == len({r["seq_id"] for r in rows}) == te.count()
+    assert {r["pred_ano"] for r in rows} <= {0, 1}
+    if _SPARK_MODELS[model][2]:
+        assert evaluate(out)["f1"] > 0.9, (model, evaluate(out))
+
+
+_groups = itertools.count()
+
+
+def _jobs_of(spark, run):
+    """``(name, tasks of each stage that ran)`` for every job ``run()``
+    launches, in job order, read from the status store in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"ad-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    jobs = []
+    for j in sorted(tracker.getJobIdsForGroup(group)):
+        # a skipped stage completed no task; the store drops skipped stages
+        # first once it holds spark.ui.retainedStages, so it may be None
+        infos = [tracker.getStageInfo(st) for st in tracker.getJobInfo(j).stageIds]
+        ran = sorted(i.numCompletedTasks for i in infos if i and i.numCompletedTasks)
+        jobs.append((store.job(j).name(), ran))
+    return jobs
+
+
+def _tree_aggregates(jobs):
+    return [tasks for name, tasks in jobs if name.startswith("treeAggregate")]
+
+
+@pytest.fixture
+def min_partition_size(spark):
+    """Sets ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` for
+    one test and restores it after."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prev = spark.conf.get(key)
+    try:
+        yield lambda v: spark.conf.set(key, v)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_lr_iterations_run_one_single_task_stage(spark):
+    """The small train frame fits on one coalesced partition: the
+    Summarizer pass and every L-BFGS iteration is one stage of one task."""
+    seq, _ = _counted_seqs(spark)
+    agg = _tree_aggregates(_jobs_of(spark, lambda: _lr_detector().train(seq, "LR")))
+    assert len(agg) > 2
+    assert all(tasks == [1] for tasks in agg), agg
+
+
+def test_estimator_keeps_every_partition_under_a_tiny_min_size(spark, min_partition_size):
+    seq, _ = _counted_seqs(spark)
+    n = seq.rdd.getNumPartitions()
+    min_partition_size("4b")
+    agg = _tree_aggregates(_jobs_of(spark, lambda: _lr_detector().train(seq, "LR")))
+    assert n > 1 and agg
+    assert all(max(tasks) == n for tasks in agg), agg
+
+
+def test_coalesced_lr_fit_matches_the_uncoalesced_fit(labeled_seq, min_partition_size):
+    tr, te = train_test_split(labeled_seq, 0.5)
+
+    def fit():
+        det = AnomalyDetector(SeqFeaturizer(item_col="events", numeric_cols=("seq_len",)))
+        det.train(tr, "LR")
+        preds = det.predict(te).select("seq_id", "probability", "pred_ano").orderBy("seq_id")
+        return det.model, [(r[0], r[2]) for r in preds.collect()]
+
+    coalesced, coalesced_preds = fit()
+    min_partition_size("4b")
+    full, full_preds = fit()
+    assert coalesced_preds == full_preds
+    assert coalesced.summary.totalIterations == full.summary.totalIterations
+    assert abs(coalesced.intercept - full.intercept) <= 1e-9
+    assert max(abs(a - b) for a, b in zip(coalesced.coefficients, full.coefficients)) <= 1e-9
+
+
+def test_fit_view_reads_size_and_partitions_without_a_job(spark):
+    seq, _ = _counted_seqs(spark)
+    seq.persist()
+    try:
+        seq.count()
+        views = []
+        assert _jobs_of(spark, lambda: views.append(_fit_view(seq))) == []
+        assert views[0].rdd.getNumPartitions() == 1
+    finally:
+        seq.unpersist()
+
+
+def test_train_without_items_builds_the_cache_at_full_parallelism(spark):
+    """With no vocabulary fit, the cache is still built by a job at the
+    input's parallelism before the coalesced view reads it."""
+    seq, evals = _counted_seqs(spark)
+    n = seq.rdd.getNumPartitions()
+    det = AnomalyDetector(SeqFeaturizer(item_col=None, numeric_cols=("seq_len",)))
+    jobs = _jobs_of(spark, lambda: det.train(seq, "LR"))
+    assert n > 1 and jobs[0][1] == [n], jobs
+    assert all(tasks == [1] for tasks in _tree_aggregates(jobs)), jobs
+    assert evals.value == 60
 
 
 # ------------------------------------------------------------------ streaming

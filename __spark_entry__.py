@@ -44,28 +44,21 @@ def _fan(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# Evidence namespace (round-7, advisor fix): the materialized-oracle
-# evidence dirs (SAMPLE_OUTPUT, IVF_TOPK_OUTPUT, ...) used to live at
-# fixed, predictable /tmp paths — two concurrent runs (pytest +
-# crosscheck, or two users on a shared box) could overwrite each other's
-# evidence between the Spark-side write and the DuckDB read (usually
-# fail-visible as a hash mismatch, but a torn read mid-overwrite was
-# possible). The base is now namespaced per uid+pid. This is CORRECT
-# because the per-entry write guards are already per-process module
-# globals (every process rewrites its own evidence on first use) and the
-# gate/crosscheck run queries() and oracle_sql() in one process — the
-# SQL strings embed this process's paths. The dir is reclaimed atexit;
-# set SPARKLEAD_EVIDENCE_DIR to pin a stable path instead (no
-# auto-cleanup then — the caller owns it).
+# Evidence namespace: the materialized-oracle evidence dirs
+# (SAMPLE_OUTPUT, IVF_TOPK_OUTPUT, ...) live under one per-user base,
+# /tmp/sparklead_evidence_{uid}. The rendered oracle_sql() embeds these
+# paths, so the base must not depend on the process: two runs of the
+# same checkout render byte-identical oracle SQL. Every process rewrites
+# its own evidence on first use (the per-entry write guards are
+# per-process module globals), and the gate/crosscheck run queries() and
+# oracle_sql() in one process. The shared default is never removed at
+# exit, because another process may be reading it. Runs that must be
+# isolated from each other (pytest next to a crosscheck, say) set
+# SPARKLEAD_EVIDENCE_DIR to a dir of their own; the caller owns it.
 # ---------------------------------------------------------------------
 _EVIDENCE_BASE = os.environ.get("SPARKLEAD_EVIDENCE_DIR") or (
-    f"/tmp/sparklead_evidence_{os.getuid()}_{os.getpid()}"
+    f"/tmp/sparklead_evidence_{os.getuid()}"
 )
-if "SPARKLEAD_EVIDENCE_DIR" not in os.environ:
-    import atexit as _atexit
-    import shutil as _shutil
-
-    _atexit.register(_shutil.rmtree, _EVIDENCE_BASE, ignore_errors=True)
 
 
 # =====================================================================

@@ -32,11 +32,9 @@ Design for 100 TB:
   inherently iterative — ``bpe_train`` re-counts pairs on the rewritten
   corpus each round (n_merges corpus scans, the honest cost of exact
   BPE; incremental pair-delta maintenance is the known optimization and
-  is documented out of scope), truncating lineage every
-  ``truncate_every`` rounds via plan_utils.LineageTruncator so the plan
-  never compounds (the CLAUDE.md deep-loop rule). Callers thread a
-  ``scratch_dir`` for cluster URIs; the returned frame re-exports
-  ``sparklead_release_scratch``.
+  is documented out of scope), checkpointing the corpus every
+  ``_TRUNCATE_EVERY`` rounds (plan_utils.truncate_lineage) so the plan
+  never compounds (the deep-loop rule).
 """
 
 from __future__ import annotations
@@ -44,7 +42,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sparklead.plan_utils import LineageTruncator
+from sparklead.plan_utils import truncate_lineage
+
+# checkpoint the rewritten corpus every N training rounds (deep-loop rule):
+# each round stacks one merge fold onto the corpus plan
+_TRUNCATE_EVERY = 4
 
 
 def _adjacent_pairs(tokens_col: str | Column) -> Column:
@@ -127,8 +129,6 @@ def bpe_train(
     tokens_col: str = "tokens",
     new_id_start: int | None = None,
     min_count: int = 2,
-    truncate_every: int = 4,
-    scratch_dir: str | None = None,
 ) -> tuple[list[tuple[int, int, int]], DataFrame]:
     """Learn ``n_merges`` rules; returns (merge_table, rewritten_corpus).
 
@@ -136,10 +136,8 @@ def bpe_train(
     a asc, b asc) maximum, mint the next id, rewrite. Stops early when
     no pair reaches ``min_count`` (merging singletons is meaningless).
     ``new_id_start`` defaults to max(token)+1 over the input corpus.
-    The rewritten corpus' lineage is truncated every ``truncate_every``
-    rounds (deep-loop rule); the returned frame carries
-    ``sparklead_release_scratch`` — call it once the frame (and
-    everything derived from it) is materialized or dropped."""
+    The rewritten corpus' lineage is truncated every ``_TRUNCATE_EVERY``
+    rounds (deep-loop rule)."""
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
     if new_id_start is None:
@@ -147,13 +145,8 @@ def bpe_train(
             F.max(F.array_max(F.coalesce(F.col(tokens_col), F.expr("array(0)"))))
         ).first()[0]
         new_id_start = int(mx or 0) + 1
-    trunc = LineageTruncator(scratch_dir, prefix="sparklead_bpe")
     merges: list[tuple[int, int, int]] = []
-    # fresh frame up front (round-8 advisor): when n_merges == 0 or the
-    # min_count early-stop fires before the first merge, the
-    # sparklead_release_scratch attribute below must never land on the
-    # CALLER's input object
-    cur = df.select("*")
+    cur = df
     for i in range(n_merges):
         top = (
             bpe_pair_counts(cur, tokens_col)
@@ -167,7 +160,6 @@ def bpe_train(
         new_id = new_id_start + i
         merges.append((a, b, new_id))
         cur = apply_merges(cur, [(a, b, new_id)], tokens_col)
-        if (i + 1) % truncate_every == 0:
-            cur = trunc.roundtrip(cur)
-    cur.sparklead_release_scratch = trunc.release
+        if (i + 1) % _TRUNCATE_EVERY == 0:
+            cur = truncate_lineage(cur)
     return merges, cur

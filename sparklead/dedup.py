@@ -542,7 +542,7 @@ def with_simhash_md5(
 
 # Truncate the iterative plan's lineage every N rounds (see
 # neardup_components docstring). 8 keeps typical near-dup graphs
-# (diameter 2-4) roundtrip-free while staying well under the measured
+# (diameter 2-4) checkpoint-free while staying well under the measured
 # driver-OOM depth (~16 rounds at 8 g).
 _TRUNCATE_EVERY = 8
 
@@ -562,8 +562,7 @@ def _small_graph_components(
     = the minimum id reachable — value-identical to the converged
     label-propagation loop (which computes the same min-reachable-id
     fixpoint), with none of the loop's per-round job waves. Returns the
-    contract frame: PERSISTED (id, component) with the ids' dtype, plus a
-    no-op ``sparklead_release_scratch``."""
+    contract frame: PERSISTED (id, component) with the ids' dtype."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -597,7 +596,6 @@ def _small_graph_components(
         [(v, find(v)) for v in sorted(verts)], schema
     ).persist()
     out.count()
-    out.sparklead_release_scratch = lambda: None
     return out
 
 
@@ -606,7 +604,6 @@ def neardup_components(
     a_col: str = "a_id",
     b_col: str = "b_id",
     max_iter: int = 20,
-    scratch_dir: str | None = None,
     small_graph_edges: int | None = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate GROUPS: (id, component).
@@ -649,24 +646,14 @@ def neardup_components(
     OOM'd the 8 g driver during plan handling, INSIDE the default
     ``max_iter`` envelope and independent of data size (the pre-fusion
     round-5 loop fails identically). Every ``_TRUNCATE_EVERY`` rounds the
-    vertex-sized label frame is therefore written to ``scratch_dir`` and
-    re-read, resetting the plan to a fresh scan — the standard iterative-
-    graph pattern (GraphFrames checkpoints the same way), done with a
-    parquet roundtrip instead of RDD checkpoints so the caller-owned
-    cache contract (getPersistentRDDs pins) and eviction-recompute safety
-    both hold. ``scratch_dir`` defaults to a per-call temp dir; ON A
-    CLUSTER pass a job-scratch URI (HDFS/S3) — the dir must outlive the
-    returned frame (an evicted cache partition recomputes from the last
-    roundtrip file). Graphs that converge within ``_TRUNCATE_EVERY``
-    rounds — every real near-dup graph — never pay the roundtrip.
-
-    SCRATCH RECLAMATION (round-7): the returned frame carries a
-    ``sparklead_release_scratch`` attribute — call it (no args) after the
-    documented ``.unpersist()`` to delete this call's roundtrip files;
-    with the local tempdir default they are also reclaimed at process
-    exit automatically. ``getattr(labels, "sparklead_release_scratch",
-    lambda: None)()`` is the defensive spelling for frames that may have
-    passed through transformations (DataFrame attributes don't propagate).
+    vertex-sized label frame is therefore checkpointed
+    (plan_utils.truncate_lineage), resetting the plan to a scan of the
+    checkpoint files — the standard iterative-graph pattern (GraphFrames
+    checkpoints the same way). Reliable checkpoints keep the caller-owned
+    cache contract (getPersistentRDDs pins) and eviction-recompute safety;
+    ON A CLUSTER set ``spark.checkpoint.dir``. Graphs that converge within
+    ``_TRUNCATE_EVERY`` rounds — every real near-dup graph — never pay
+    the checkpoint.
     """
     import warnings
 
@@ -721,12 +708,11 @@ def neardup_components(
     ).persist()
     labels = verts.withColumn("component", F.col("id")).persist()
     labels.count()
-    from sparklead.plan_utils import LineageTruncator
+    from sparklead.plan_utils import truncate_lineage
 
     changed = 0
     prev_cached = labels
     final = None
-    truncator = LineageTruncator(scratch_dir, prefix="sparklead_components")
     try:
         for i in range(max_iter):
             # neighbor∪self minimum: propagate each vertex's label across edges
@@ -752,7 +738,7 @@ def neardup_components(
             if (i + 1) % _TRUNCATE_EVERY == 0:
                 # deep loop: reset the plan to a fresh scan (docstring —
                 # driver-side Catalyst state otherwise OOMs at ~16 rounds)
-                labels = truncator.roundtrip(labels)
+                labels = truncate_lineage(labels)
                 new_labels.unpersist()
                 prev_cached = None
         if changed > 0:
@@ -789,31 +775,21 @@ def neardup_components(
         final = labels.persist()
         final.count()
     except Exception:
-        # error path (e.g. a scratch write failing mid-loop or a failed
+        # error path (e.g. a checkpoint write failing mid-loop or a failed
         # probe/final job): release every cache this call created before
         # propagating, or a caller that catches and retries accumulates
         # orphaned persisted frames — the no-cache-outlives-a-public-call
-        # contract holds on failure too. No frame escapes, so the scratch
-        # files can go with the caches (round-7, advisor fix).
+        # contract holds on failure too.
         for frame in (edges_self, prev_cached, final):
             if frame is not None:
                 try:
                     frame.unpersist()
                 except Exception:
                     pass
-        truncator.release()
         raise
     edges_self.unpersist()
     if prev_cached is not None and prev_cached is not final:
         prev_cached.unpersist()
-    # scratch reclamation hook (round-7, advisor fix): callers invoke this
-    # AFTER their documented .unpersist() of the returned frame — an
-    # evicted cache partition recomputes from the last roundtrip file, so
-    # scratch must outlive the cache, and only the caller knows when that
-    # is. No-op for loops that never truncated (every graph with diameter
-    # < _TRUNCATE_EVERY). The local-tempdir default is additionally
-    # atexit-reclaimed even if this is never called.
-    final.sparklead_release_scratch = truncator.release
     return final
 
 
@@ -824,7 +800,6 @@ def dedup_by_components(
     a_col: str = "a_id",
     b_col: str = "b_id",
     components: DataFrame | None = None,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dedup decision: keep one representative per connected
     near-duplicate group (the min-id member), pass through all unpaired rows.
@@ -837,25 +812,19 @@ def dedup_by_components(
     deduping many corpora should clear them after materializing:
     ``spark.catalog.clearCache()``, or (round-8, for composed pipelines
     that must not nuke unrelated caches) unpersist the labels frame
-    re-exported as ``sparklead_component_labels`` on the returned frame,
-    THEN call ``sparklead_release_scratch``. Pass ``components`` when the
-    labels were already resolved (avoids re-running the propagation loop
-    for callers that need both pairs-view and decision)."""
+    re-exported as ``sparklead_component_labels`` on the returned frame.
+    Pass ``components`` when the labels were already resolved (avoids
+    re-running the propagation loop for callers that need both
+    pairs-view and decision)."""
     comps = (
         components
         if components is not None
-        else neardup_components(pairs, a_col, b_col, scratch_dir=scratch_dir)
+        else neardup_components(pairs, a_col, b_col)
     )
     drops = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(key_col)
     )
     out = df.join(drops, key_col, "left_anti")
-    # propagate the scratch-reclamation hook (round-7): the result joins
-    # against the persisted labels, whose eviction-recompute may root at
-    # the truncator's last roundtrip file
-    out.sparklead_release_scratch = getattr(
-        comps, "sparklead_release_scratch", lambda: None
-    )
     # round-8: let composed callers release the ONE cache this contract
     # leaves behind without a global clearCache (llm_pipeline.py)
     out.sparklead_component_labels = comps
@@ -871,7 +840,6 @@ def neardup_text_dedup(
     bands: int = 4,
     threshold: float = 0.7,
     max_bucket: int = 10_000,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """One-call TEXT near-dedup: exact-dup collapse -> MinHash-LSH
     candidates -> exact Jaccard verify -> connected-component grouping ->
@@ -916,11 +884,7 @@ def neardup_text_dedup(
 
     Returns the deduplicated frame: ``df``'s columns for every kept row.
     Exact duplicates keep the min-key member; near-duplicate groups keep
-    the min-key member of each verified connected component.
-
-    ``scratch_dir`` forwards to ``neardup_components`` for deep-chain
-    (diameter > 8) lineage roundtrips — on a cluster pass a job-scratch
-    URI (see its docstring); irrelevant for typical shallow dup graphs."""
+    the min-key member of each verified connected component."""
     exact_keep = exact_dedup(df, text_col, key_col)
     cands = minhash_candidates(
         exact_keep, text_col, key_col, shingle_n, num_hashes, bands, max_bucket, fast=True
@@ -931,7 +895,7 @@ def neardup_text_dedup(
     try:
         # materializes the component labels (persisted inside) — the one
         # evaluation that fills both pair-sized caches above
-        comps = neardup_components(verified, scratch_dir=scratch_dir)
+        comps = neardup_components(verified)
     except Exception:
         for frame in (cands, verified):
             try:

@@ -27,10 +27,8 @@ Stage boundaries are MATERIALIZED on purpose:
 
 Cache discipline: the dedup stage's component labels (the one persisted
 frame its contract leaves behind) are unpersisted immediately after the
-sink write via the ``sparklead_component_labels`` re-export, then the
-lineage-truncator scratch is released (``sparklead_release_scratch``,
-AFTER the unpersist per the plan_utils contract). No persisted state and
-no scratch outlives ``run_llm_pipeline``.
+sink write via the ``sparklead_component_labels`` re-export. No persisted
+state outlives ``run_llm_pipeline``.
 """
 
 from __future__ import annotations
@@ -93,7 +91,6 @@ def run_llm_pipeline(
     seed: int = 0,
     fast: bool = True,
     resume: bool = True,
-    scratch_dir: str | None = None,
     scrub: bool = False,
     scrub_min_words: int = 3,
     scrub_min_lines: int = 1,
@@ -171,19 +168,14 @@ def run_llm_pipeline(
 
     deduped_frame = _stage(
         "dedup",
-        lambda: neardup_text_dedup(
-            docs, text_col, key_col,
-            threshold=dedup_threshold, scratch_dir=scratch_dir,
-        ),
+        lambda: neardup_text_dedup(docs, text_col, key_col, threshold=dedup_threshold),
     )
     if deduped_frame is not None:
-        # release the stage-owned caches NOW (labels first, scratch after —
-        # the plan_utils ordering contract); the sink is materialized, so
+        # release the stage-owned cache NOW; the sink is materialized, so
         # downstream stages scan parquet, never this lineage
         labels = getattr(deduped_frame, "sparklead_component_labels", None)
         if labels is not None:
             labels.unpersist()
-        getattr(deduped_frame, "sparklead_release_scratch", lambda: None)()
     deduped = _read("dedup")
 
     _stage(

@@ -44,7 +44,6 @@ def _keyed(
     tokens_col: str,
     rounds: int,
     bijection: bool = False,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Attach the final part_key to every row (S1 + ``rounds`` S2 rounds,
     optionally followed by the S3 bijection split).
@@ -57,10 +56,9 @@ def _keyed(
     Default off: the iterated-S2 granularity is this miner's documented
     contract and what the golden tests pin; turn it on for reference-exact
     S1+S2+S3 staging."""
-    from sparklead.plan_utils import LineageTruncator
+    from sparklead.plan_utils import truncate_lineage
 
     base = df.withColumn("part_key", F.concat(F.lit("S1:"), F.size(tokens_col).cast("string")))
-    truncator = LineageTruncator(scratch_dir, prefix="sparklead_pliplom")
     for r in range(rounds):
         base = split_round(base, tokens_col, f"s{r + 2}")
         # LINEAGE TRUNCATION for deep rounds (round-6, the
@@ -68,20 +66,16 @@ def _keyed(
         # references ``base`` twice (stats agg + refine join), so the
         # logical plan DOUBLES per round — 2^rounds nodes, driver OOM at
         # ~14 (CLAUDE.md). Every _TRUNCATE_EVERY rounds a corpus-sized
-        # parquet roundtrip resets the plan; the default rounds=2 (and
+        # checkpoint resets the plan; the default rounds=2 (and
         # every golden/gate configuration) never reaches it, keeping the
         # miner fully lazy there. Skipped on the last round — the caller's
         # own materialization boundary (persist in parse_pl_iplom) follows.
         if (r + 1) % _TRUNCATE_EVERY == 0 and r + 1 < rounds:
-            base = truncator.roundtrip(base)
+            base = truncate_lineage(base)
     if bijection:
         from sparklead.mining.iplom import _step3
 
         base = _step3(base, tokens_col)
-    # scratch reclamation hook (round-7, advisor fix — see plan_utils):
-    # the caller invokes it once nothing can recompute from the roundtrip
-    # files; no-op when rounds <= _TRUNCATE_EVERY (no roundtrip fired)
-    base.sparklead_release_scratch = truncator.release
     return base
 
 
@@ -92,24 +86,19 @@ def pl_iplom_templates(
     support_threshold: float = 0.0001,
     _keyed_df: DataFrame | None = None,
     bijection: bool = False,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Mine templates: returns (part_key, template, part_len, template_id, is_outlier).
 
     Template = per position: countDistinct==1 ? first : '<*>' (pl_iplom.py:21-38).
     ``is_outlier`` marks partitions under the file-support threshold (FST,
     pl_iplom.py:232-242). template_id = md5(template)[:8] prefixed 'e'.
-    ``scratch_dir``: deep-round lineage roundtrips land here (the first
-    fires after round _TRUNCATE_EVERY when MORE rounds follow, i.e. only
-    for ``rounds`` > _TRUNCATE_EVERY) — ON A CLUSTER pass a job-scratch
-    URI reachable by every executor (the local tempdir default is
-    single-process only; cluster callers own eventual scratch
-    reclamation, see plan_utils.LineageTruncator).
+    Only ``rounds`` > _TRUNCATE_EVERY checkpoints (plan_utils.truncate_lineage);
+    ON A CLUSTER set ``spark.checkpoint.dir`` for those.
     """
     base = (
         _keyed_df
         if _keyed_df is not None
-        else _keyed(df.select(tokens_col), tokens_col, rounds, bijection, scratch_dir=scratch_dir)
+        else _keyed(df.select(tokens_col), tokens_col, rounds, bijection)
     )
     # FST over the template table's own sizes (keyed.flag_outliers): no
     # count() job over the data-sized input
@@ -123,7 +112,6 @@ def parse_pl_iplom(
     rounds: int = 2,
     support_threshold: float = 0.0001,
     bijection: bool = False,
-    scratch_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Assign each event its PL-IPLoM template id; returns (df+id, template table).
 
@@ -135,19 +123,11 @@ def parse_pl_iplom(
     broadcast join) is keyed.assign_by_key, shared with parse_iplom and
     parse_brain: no cached data-sized frame outlives the call.
     """
-    keyed = _keyed(df, tokens_col, rounds, bijection, scratch_dir=scratch_dir)
+    keyed = _keyed(df, tokens_col, rounds, bijection)
     assigned, tpl = assign_by_key(
         keyed,
         "part_key",
         lambda k: pl_iplom_templates(df, tokens_col, rounds, support_threshold, _keyed_df=k),
         out_col,
-    )
-    # propagate the scratch-reclamation hook (round-7, advisor fix):
-    # ``assigned`` recomputes through the keyed lineage, whose deep-round
-    # variant roots at the truncator's last roundtrip file — the caller
-    # calls this once ``assigned`` is materialized or dropped (no-op for
-    # rounds <= _TRUNCATE_EVERY; tempdir default also atexit-reclaimed)
-    assigned.sparklead_release_scratch = getattr(
-        keyed, "sparklead_release_scratch", lambda: None
     )
     return assigned, tpl

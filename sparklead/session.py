@@ -24,6 +24,9 @@ _DEFAULTS = {
     # Broadcast small dims aggressively (label/source lookups are tiny).
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.driver.memory": "8g",
+    # Delete a deep loop's lineage checkpoints (plan_utils.truncate_lineage)
+    # once no frame references them, not at session end.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     # Throughput GC: G1's concurrent phases collapse 32-thread local-mode
     # runs on this host (measured 2.7x slower than ParallelGC on the
     # HOF-heavy token pipeline); ParallelGC restores linear thread scaling.

@@ -89,3 +89,26 @@ def test_queries_run_at_sf0001(spark, sf_dir):
                     f"set: windowspecdefinition({arg}"
                 )
         assert df.limit(1).count() >= 0, name
+
+
+def test_oracle_sql_identical_across_processes():
+    """The rendered oracle SQL embeds the evidence dir, so the default dir
+    must not depend on the process: two fresh interpreters must render
+    byte-identical oracle_sql()."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARKLEAD_EVIDENCE_DIR"}
+    code = "import json, __spark_entry__ as m; print(json.dumps(m.oracle_sql(), sort_keys=True))"
+    dumps = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env,
+            capture_output=True, text=True, check=True,
+        ).stdout
+        for _ in range(2)
+    ]
+    assert json.loads(dumps[0])
+    assert dumps[0] == dumps[1]

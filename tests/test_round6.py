@@ -595,19 +595,17 @@ def test_win_first_args_paren_aware():
 
 # --------------------------------------- components lineage truncation
 
-def test_neardup_components_lineage_truncation(spark, monkeypatch, tmp_path):
+def test_neardup_components_lineage_truncation(spark, monkeypatch):
     """Round-6 (found by tools/components_ab.py): DEEP propagation loops —
     even with the single-reference self-edge plan — grow driver-side
     Catalyst state super-linearly: 12 rounds took 68 s and 16 rounds
     OOM'd the 8 g driver, inside the default max_iter envelope and
     independent of data size. The loop now truncates lineage with a
-    vertex-sized parquet roundtrip every _TRUNCATE_EVERY rounds (after the
+    vertex-sized checkpoint every _TRUNCATE_EVERY rounds (after the
     fix the same fixtures run 15 s / 18.8 s). This test forces several
-    truncations on a small chain and pins: exact labels, the caller-owned
-    cache contract (exactly one persisted frame, freed by unpersist), and
-    that roundtrip files were actually written."""
-    import os
-
+    truncations on a small chain and pins: exact labels and the
+    caller-owned cache contract (exactly one persisted frame, freed by
+    unpersist) — checkpoints add no persisted frame of their own."""
     from sparklead import dedup
 
     monkeypatch.setattr(dedup, "_TRUNCATE_EVERY", 3)
@@ -616,24 +614,12 @@ def test_neardup_components_lineage_truncation(spark, monkeypatch, tmp_path):
         F.col("id").alias("a_id"), (F.col("id") + 1).alias("b_id")
     )
     spark.catalog.clearCache()
-    labels = dedup.neardup_components(
-        pairs, max_iter=n, scratch_dir=str(tmp_path), small_graph_edges=None
-    )
+    labels = dedup.neardup_components(pairs, max_iter=n, small_graph_edges=None)
     assert {r["id"]: r["component"] for r in labels.collect()} == {i: 0 for i in range(n)}
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 1
     labels.unpersist()
     assert jsc.getPersistentRDDs().size() == 0
-    # scratch lifecycle (second round-6 review pass): the call wrote into
-    # its own per-call subdir under scratch_dir, and superseded roundtrips
-    # were deleted DEFERRED BY ONE (roundtrip N dies when N+2 is durable —
-    # frames unpersisted only after the N+1 call may still root recompute
-    # at N). 4 truncations (rounds 3/6/9/12) leave exactly the last two
-    # file trees; the final one must outlive the returned frame.
-    subdirs = [d for d in os.listdir(tmp_path) if d.startswith("sparklead_components")]
-    assert len(subdirs) == 1
-    rounds_left = sorted(os.listdir(tmp_path / subdirs[0]))
-    assert rounds_left == ["r3", "r4"]
 
 
 def test_ivf_topk_empty_corpus(spark):
@@ -653,11 +639,11 @@ def test_ivf_topk_empty_corpus(spark):
 def test_pl_iplom_deep_rounds_truncation(spark, monkeypatch):
     """Round-6: mining.keyed.split_round references its input twice (stats
     agg + refine join), so the S2 loop's logical plan DOUBLES per round —
-    2^rounds nodes, the documented driver-OOM shape at ~14 rounds. _keyed now does a
-    lineage-truncating parquet roundtrip every _TRUNCATE_EVERY rounds;
-    this pins that the roundtrip is a semantic NO-OP: deep-round templates
-    with truncation (rounds=9 -> truncations after rounds 4 and 8) equal
-    the same mining with truncation disabled."""
+    2^rounds nodes, the documented driver-OOM shape at ~14 rounds. _keyed now
+    checkpoints every _TRUNCATE_EVERY rounds; this pins that the checkpoint
+    is a semantic NO-OP: deep-round templates with truncation (rounds=6,
+    _TRUNCATE_EVERY=2 -> truncations after rounds 2 and 4) equal the same
+    mining with truncation disabled."""
     from sparklead.mining import pl_iplom as P
 
     lines = [
@@ -670,9 +656,10 @@ def test_pl_iplom_deep_rounds_truncation(spark, monkeypatch):
     def mine():
         return {
             (r["part_key"], r["template"])
-            for r in P.pl_iplom_templates(df, rounds=9).collect()
+            for r in P.pl_iplom_templates(df, rounds=6).collect()
         }
 
+    monkeypatch.setattr(P, "_TRUNCATE_EVERY", 2)
     with_trunc = mine()
     monkeypatch.setattr(P, "_TRUNCATE_EVERY", 99)
     without_trunc = mine()

@@ -1,5 +1,5 @@
 """Round-7 additions: decontamination operator, neardup_text_dedup cache
-discipline, LineageTruncator release/atexit reclamation, plan-tree
+discipline, deep-chain checkpoint lifecycle, plan-tree
 row-multiplier detection, report-pivot gate leg, oracle float-boundary
 (ulp) guards."""
 
@@ -144,71 +144,59 @@ def test_neardup_text_dedup_cache_contract(spark):
     out.count()
     jsc = spark.sparkContext._jsc
     assert jsc.getPersistentRDDs().size() == 1  # comps only
-    # scratch hook propagated through the composition (no-op here: shallow)
-    getattr(out, "sparklead_release_scratch", lambda: None)()
     spark.catalog.clearCache()
     assert jsc.getPersistentRDDs().size() == 0
 
 
-# ------------------------------------------------- truncator release/atexit
+# ------------------------------------------------- deep-chain checkpoint
 
-def test_lineage_truncator_release_and_atexit(spark, tmp_path):
-    from sparklead.plan_utils import LineageTruncator
+def test_neardup_components_checkpoint_deep_chain(spark):
+    """A 12-hop chain on the distributed LOOP lane (small_graph_edges=None;
+    the small-graph fast path would resolve it driver-side) runs past
+    _TRUNCATE_EVERY, so the labels come back rooted at a reliable
+    checkpoint: no cache beyond the caller-owned labels, a recompute from
+    the checkpoint files after unpersist, and Spark's ContextCleaner
+    deleting those files once the frame is dropped."""
+    import gc
+    import time
+    from urllib.parse import urlparse
 
-    t = LineageTruncator(str(tmp_path / "scratch"))
-    df = spark.range(10)
-    out = t.roundtrip(df)
-    assert out.count() == 10
-    assert t._base is not None and os.path.exists(
-        t._base.replace("file:", "")
-    )
-    base = t._base
-    t.release()
-    assert not os.path.exists(base.replace("file:", ""))
-    assert t._base is None
-    t.release()  # idempotent
-
-    # tempdir default: the base must be atexit-registered for reclamation
-    import atexit
-    import shutil
-    from unittest import mock
-
-    t2 = LineageTruncator(None)
-    with mock.patch.object(atexit, "register") as reg:
-        t2.roundtrip(df).count()
-    assert reg.call_count == 1
-    assert reg.call_args[0][0] is shutil.rmtree
-    assert reg.call_args[0][1] == t2._base
-    t2.release()
-
-
-def test_neardup_components_release_hook_deep_chain(spark, tmp_path):
-    """A >8-hop chain forces a lineage roundtrip; the returned frame's
-    sparklead_release_scratch hook must delete the scratch AFTER the
-    caller's unpersist. Round-9: targets the distributed LOOP lane
-    explicitly (small_graph_edges=None) — the default small-graph fast
-    path resolves tiny chains driver-side and never roundtrips."""
     from sparklead.dedup import neardup_components
 
+    def rdd_dirs():
+        d = spark.sparkContext.getCheckpointDir()
+        path = urlparse(d).path if d else ""
+        if not os.path.isdir(path):
+            return set()
+        return {os.path.join(path, c) for c in os.listdir(path) if c.startswith("rdd-")}
+
     n = 12
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "a_id long, b_id long"
+    pairs = spark.range(n).select(
+        F.col("id").alias("a_id"), (F.col("id") + 1).alias("b_id")
     )
-    labels = neardup_components(
-        pairs, scratch_dir=str(tmp_path / "s"), small_graph_edges=None
-    )
-    rows = {r["id"]: r["component"] for r in labels.collect()}
-    assert set(rows.values()) == {0}
-    assert hasattr(labels, "sparklead_release_scratch")
-    # a roundtrip fired (chain diameter > _TRUNCATE_EVERY), so scratch exists
-    scratch_children = list((tmp_path / "s").iterdir())
-    assert scratch_children, "expected a roundtrip scratch dir for a 12-hop chain"
+    assert "LogicalRDD" not in pairs._jdf.queryExecution().analyzed().toString()
+    spark.catalog.clearCache()
+    before = rdd_dirs()
+    labels = neardup_components(pairs, small_graph_edges=None)
+    expected = {i: 0 for i in range(n + 1)}
+    assert {r["id"]: r["component"] for r in labels.collect()} == expected
+    assert "LogicalRDD" in labels._jdf.queryExecution().analyzed().toString()
+    created = rdd_dirs() - before
+    assert created, "expected a checkpoint for a 12-hop chain"
+    jsc = spark.sparkContext._jsc
+    assert jsc.getPersistentRDDs().size() == 1
     labels.unpersist()
-    labels.sparklead_release_scratch()
-    leftover = [p for d in (tmp_path / "s").iterdir() for p in d.iterdir()] if (
-        tmp_path / "s"
-    ).exists() else []
-    assert leftover == [], f"scratch not reclaimed: {leftover}"
+    assert jsc.getPersistentRDDs().size() == 0
+    # recomputed from the checkpoint files, not the propagation rounds
+    assert {r["id"]: r["component"] for r in labels.collect()} == expected
+
+    del labels
+    deadline = time.time() + 30
+    while created & rdd_dirs() and time.time() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not created & rdd_dirs(), f"checkpoint files not cleaned: {created}"
 
 
 # ------------------------------------------------- plan-tree multiplier walk

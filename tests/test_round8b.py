@@ -282,7 +282,8 @@ def _py_bpe(docs, n_merges, new_id_start, min_count=2):
     return merges, corpus
 
 
-def test_bpe_fixture_and_greedy_semantics(spark):
+def test_bpe_fixture_and_greedy_semantics(spark, monkeypatch):
+    from sparklead import bpe
     from sparklead.bpe import apply_merges, bpe_top_pairs, bpe_train
 
     rows = [
@@ -295,12 +296,12 @@ def test_bpe_fixture_and_greedy_semantics(spark):
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
     top = [(r["a"], r["b"], r["cnt"], r["rank"]) for r in bpe_top_pairs(df, 3).collect()]
     assert top == [(1, 2, 5, 1), (5, 5, 3, 2), (2, 1, 2, 3)]
-    merges, out = bpe_train(df, 3, truncate_every=2)
+    monkeypatch.setattr(bpe, "_TRUNCATE_EVERY", 2)
+    merges, out = bpe_train(df, 3)
     exp_merges, exp_corpus = _py_bpe(dict(rows), 3, 8)
     assert merges == exp_merges == [(1, 2, 8), (5, 5, 9), (8, 3, 10)]
     got = {r["doc_id"]: r["tokens"] for r in out.orderBy("doc_id").collect()}
     assert got == exp_corpus
-    out.sparklead_release_scratch()
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
     # single-pass table application == the train-time rewrites
     reapplied = {
@@ -313,6 +314,9 @@ def test_bpe_fixture_and_greedy_semantics(spark):
 @settings(max_examples=4, deadline=None)
 @given(st.data())
 def test_bpe_matches_python_oracle(spark, data):
+    from unittest import mock
+
+    from sparklead import bpe
     from sparklead.bpe import bpe_train
 
     doc = st.lists(st.integers(min_value=0, max_value=3), min_size=0, max_size=10)
@@ -320,12 +324,12 @@ def test_bpe_matches_python_oracle(spark, data):
     docs = {i: t for i, t in enumerate(toks)}
     n_merges = data.draw(st.integers(min_value=0, max_value=4))
     df = spark.createDataFrame(list(docs.items()), "doc_id long, tokens array<int>")
-    merges, out = bpe_train(df, n_merges, new_id_start=100, truncate_every=2)
+    with mock.patch.object(bpe, "_TRUNCATE_EVERY", 2):
+        merges, out = bpe_train(df, n_merges, new_id_start=100)
     exp_merges, exp_corpus = _py_bpe(docs, n_merges, 100)
     assert merges == exp_merges, (docs, n_merges)
     got = {r["doc_id"]: r["tokens"] for r in out.collect()}
     assert got == exp_corpus, (docs, merges)
-    out.sparklead_release_scratch()
 
 
 def test_bpe_pair_counts_duckdb_certification(spark):
@@ -430,7 +434,7 @@ def test_llm_pipeline_full_hygiene_stages(spark, tmp_path):
     assert all(m.get("resumed") for m in res2["manifests"].values())
 
 
-def test_bpe_merge_application_duckdb_recursive_replay(spark):
+def test_bpe_merge_application_duckdb_recursive_replay(spark, monkeypatch):
     """Cross-engine certification of the GREEDY FOLD itself (the
     packing-oracle pattern): DuckDB replays merge application item by
     item via a RECURSIVE CTE — same left-to-right recurrence, same
@@ -438,14 +442,15 @@ def test_bpe_merge_application_duckdb_recursive_replay(spark):
     top-3 learned rules chained in priority order."""
     import duckdb
 
+    from sparklead import bpe
     from sparklead.bpe import apply_merges, bpe_train
     from sparklead.synth import pretokenized
 
     docs = pretokenized(spark, 150, partitions=2).select("doc_id", "tokens")
-    merges, out = bpe_train(docs, 3, truncate_every=10)
+    monkeypatch.setattr(bpe, "_TRUNCATE_EVERY", 10)
+    merges, _ = bpe_train(docs, 3)
     assert len(merges) == 3
     got = {r["doc_id"]: r["tokens"] for r in apply_merges(docs, merges).collect()}
-    out.sparklead_release_scratch()
 
     con = duckdb.connect()
     con.register("corpus", docs.toPandas())

@@ -7,7 +7,8 @@ Written as a same-session A/B harness for the round-6 convergence-check
 fusion; what it actually FOUND was a data-size-independent depth limit —
 driver-side Catalyst state grows super-linearly with round count (68 s at
 12 rounds, 8 g-driver OOM at 16, pre- and post-fusion alike) — which led
-to the parquet lineage-truncation fix (``_TRUNCATE_EVERY`` in dedup.py).
+to periodic lineage truncation by checkpoint (``_TRUNCATE_EVERY`` in
+dedup.py, ``plan_utils.truncate_lineage``).
 Measurements recorded in BENCH.md "deep-loop robustness". Keep running
 this after any change to the propagation loop.
 

@@ -170,10 +170,9 @@ def llm_pipeline(spark, span, f, n, out):
 def bpe(spark, span, f, n, out):
     docs = f["docs"].select("doc_id", "tokens")
     with span("bpe.bpe_train"):
-        merges, trained = bpe_train(docs, N_MERGES, scratch_dir=out)
+        merges, _ = bpe_train(docs, N_MERGES)
     with span("bpe.apply_merges"):
         out_tokens = apply_merges(docs, merges).agg(F.sum(F.size("tokens"))).first()[0]
-    trained.sparklead_release_scratch()
     in_tokens = docs.agg(F.sum(F.size("tokens"))).first()[0]
     return {"n_merges_learned": len(merges), "in_tokens": in_tokens, "out_tokens": out_tokens,
             "compression": round(1 - out_tokens / max(in_tokens, 1), 4)}
